@@ -467,7 +467,12 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid as _uuid
 
-    from gmall_flink_spark.sinks._bucketed import read_state, with_bucket
+    from gmall_flink_spark.sinks._bucketed import (
+        BUCKET_COL,
+        cluster_by_bucket,
+        read_state,
+        with_bucket,
+    )
     from gmall_flink_spark.sources.tables import memo_key
 
     key = memo_key(spark, sf_dir, "documents", _COMPONENTS)
@@ -478,16 +483,12 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges = _verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
             mapping = connected_components(edges)
             tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}__"
-            # cluster by bucket before the partitionBy write (guide §6):
-            # without it every upstream task writes a file into every
-            # bucket directory (measured 496 files for a 1.8k-row mapping
-            # at sf0.1, 2-6 s to write, 0.4-0.8 s to read); one hash
-            # exchange on __bucket makes it one file per bucket (16),
-            # 0.6 s to write, half the read — and the compact layout is
-            # what the incremental merger and every later cold read scan.
-            with_bucket(mapping, ["doc_id"], COMPONENTS_N_BUCKETS).repartition(
-                F.col("__bucket")
-            ).write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+            # one file per bucket (16), not one per upstream task and
+            # bucket (496 files for a 1.8k-row mapping at sf0.1: 2-6 s to
+            # write, 0.4-0.8 s to read, against 0.6 s and half the read) —
+            # the layout the incremental merger and every cold read scan.
+            bucketed = with_bucket(mapping, ["doc_id"], COMPONENTS_N_BUCKETS)
+            cluster_by_bucket(bucketed).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
             if not any(n.startswith("__bucket=") for n in os.listdir(tmp)):
                 open(os.path.join(tmp, "_EMPTY"), "w").close()
             with open(os.path.join(tmp, "_N_BUCKETS"), "w") as fh:

@@ -10,6 +10,15 @@ Scale posture (100 TB target):
   - AQE on: runtime coalescing, skew-join splitting, dynamic join selection.
   - shuffle partitions sized by env (32 locally; a real cluster would use
     2-3x total cores — override via SPARK_GRAFT_SHUFFLE_PARTITIONS).
+  - streams started by ``streaming.core.run_available_now`` run
+    min(shuffle partitions, defaultParallelism) shuffle partitions, which
+    a stateful query keeps as its state partitions: each costs a task and
+    a versioned commit on every trigger, keyed or not, and AQE never
+    coalesces a stateful exchange. Safe there because every run gets a
+    fresh, single-use checkpoint, so the count (fixed for a checkpoint's
+    life) never outlives the cluster it was sized for.
+    ``streaming.supervise.run_supervised`` restarts long-lived checkpoints
+    and keeps the session's count.
   - Arrow enabled so the few Pandas-UDF operators batch-transfer columns.
 """
 

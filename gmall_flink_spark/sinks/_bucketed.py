@@ -66,11 +66,13 @@ def check_buckets(state_path: str, n_buckets: int) -> None:
 
 
 def pin_batch(df: DataFrame) -> DataFrame:
-    """Materialize the bucketed batch once (persist + count):
-    touched_buckets's collect and the subsequent merge/write otherwise
-    each re-execute the full upstream batch transform — 2x the expensive
-    part of the ingest hot path (e.g. the shingle->minhash->bands pipeline
-    in the LSH sink).
+    """Pin the bucketed batch (persist) so that touched_buckets's collect
+    and the later merge/write read it once: otherwise each re-executes the
+    full upstream batch transform — 2x the expensive part of the ingest
+    hot path (e.g. the shingle->minhash->bands pipeline in the LSH sink).
+    The pin is lazy: the sink's first action, touched_buckets's collect,
+    fills it (a cached relation always materializes every column), so no
+    separate count() job runs.
 
     persist, not localCheckpoint (r04 ADVICE): persisted blocks are freed
     deterministically by ``unpin_batch`` at the end of the sink's merge
@@ -80,9 +82,7 @@ def pin_batch(df: DataFrame) -> DataFrame:
     instead of failing the job under executor loss."""
     from pyspark.storagelevel import StorageLevel
 
-    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.count()
-    return pinned
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def unpin_batch(df: DataFrame) -> None:
@@ -107,25 +107,31 @@ def read_prior(spark: SparkSession, state_path: str, buckets: list[int]) -> Data
     return spark.read.parquet(state_path).where(F.col(BUCKET_COL).isin(buckets))
 
 
+def cluster_by_bucket(df: DataFrame) -> DataFrame:
+    """Hash-cluster ``df`` on the bucket column: every row of a bucket in
+    one task, so a partitionBy(bucket) write lands one file per bucket.
+    Without it every task of the frame writes a file into every touched
+    bucket directory it holds rows for, and state fragments into
+    (tasks x buckets) small files that every later read_prior /
+    read_state pays to open. A merge keyed on (bucket, *keys) over a
+    clustered frame needs no exchange of its own, and clustering an
+    already clustered frame again is planned away, so a sink may cluster
+    before its merge and swap_buckets still writes with one exchange."""
+    return df.repartition(F.col(BUCKET_COL))
+
+
 def swap_buckets(
     merged: DataFrame, state_path: str, buckets: list[int], n_buckets: int
 ) -> None:
-    """Write ``merged`` (which covers exactly ``buckets``) partitioned by
-    bucket, then atomically swap each touched bucket directory into place.
-    Untouched bucket directories are never read or written. Records the
-    bucket count on first write (see ``check_buckets``)."""
+    """Write ``merged`` (which covers exactly ``buckets``) clustered and
+    partitioned by bucket, then atomically swap each touched bucket
+    directory into place: one file per touched bucket. Untouched bucket
+    directories are never read or written. Records the bucket count on
+    first write (see ``check_buckets``)."""
     tmp = state_path.rstrip("/") + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    # cluster by bucket before the partitionBy write (guide §6): without
-    # it every task of the merged frame writes a file into every touched
-    # bucket directory, so state fragments into (tasks x buckets) small
-    # files that every later read_prior/read_state pays to open; one hash
-    # exchange on the (deterministic) bucket column makes each swap land
-    # one file per touched bucket.
-    merged.repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
-        BUCKET_COL
-    ).parquet(tmp)
+    cluster_by_bucket(merged).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
     os.makedirs(state_path, exist_ok=True)
     meta = os.path.join(state_path, _META)
     if not os.path.exists(meta):

@@ -24,7 +24,9 @@ from pyspark.sql import functions as F
 
 from gmall_flink_spark.operators.dedup import keep_last
 from gmall_flink_spark.sinks._bucketed import (
+    BUCKET_COL,
     check_buckets,
+    cluster_by_bucket,
     pin_batch,
     unpin_batch,
     read_prior,
@@ -50,31 +52,30 @@ def upsert_into(
     order_by: list[str],
     n_buckets: int = 16,
 ) -> None:
-    """MERGE one (micro-)batch into the keyed parquet state table: compact
-    the batch (keep-last per key), then merge it into the touched key
-    buckets only. The batch twin of K3 upsert-Kafka consumption and of the
-    K4 HBase dim put path."""
-    from pyspark.sql import functions as F
+    """MERGE one (micro-)batch into the keyed parquet state table: keep the
+    last row per key over the touched buckets' prior state and the raw
+    batch together, and rewrite those buckets only. The batch twin of K3
+    upsert-Kafka consumption and of the K4 HBase dim put path.
 
+    One hash exchange, on the bucket column: keep_last keyed on (bucket,
+    *keys) runs within that clustering (bucket is a function of the keys,
+    so the result is keep_last on keys), and swap_buckets's write reuses
+    it. The batch needs no compaction pass of its own."""
     spark = batch_df.sparkSession
     check_buckets(state_path, n_buckets)
-    pinned = pin_batch(
-        with_bucket(keep_last(batch_df, keys, order_by), keys, n_buckets)
-    )
+    batch = pin_batch(with_bucket(batch_df, keys, n_buckets))
     try:
-        compacted = pinned
-        buckets = touched_buckets(compacted)
+        buckets = touched_buckets(batch)
+        # a batch row beats a prior row at an equal version (__src tiebreak):
+        # a re-put of the same version overwrites, like an HBase put.
+        merged = batch.withColumn("__src", F.lit(1))
         prior = read_prior(spark, state_path, buckets)
         if prior is not None:
-            # a batch row beats a prior row at an equal version (__src tiebreak):
-            # a re-put of the same version overwrites, like an HBase put.
-            merged = prior.select(*compacted.columns).withColumn("__src", F.lit(0)).unionAll(
-                compacted.withColumn("__src", F.lit(1))
-            )
-            compacted = keep_last(merged, keys, [*order_by, "__src"]).drop("__src")
-        swap_buckets(compacted, state_path, buckets, n_buckets)
+            merged = prior.select(*batch.columns).withColumn("__src", F.lit(0)).unionAll(merged)
+        kept = keep_last(cluster_by_bucket(merged), [BUCKET_COL, *keys], [*order_by, "__src"])
+        swap_buckets(kept.drop("__src"), state_path, buckets, n_buckets)
     finally:
-        unpin_batch(pinned)
+        unpin_batch(batch)
 
 
 def upsert_writer(state_path: str, keys: list[str], order_by: list[str], n_buckets: int = 16):

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -79,6 +80,23 @@ def split_into_files(df: DataFrame, n: int, order_col: str, out_dir: str) -> str
     return out_dir
 
 
+@contextmanager
+def _session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the block, then restore each key's
+    prior value (unset when it had none), also when the block raises."""
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_available_now(
     sdf: DataFrame,
     output_mode: str = "append",
@@ -91,70 +109,51 @@ def run_available_now(
 
     Without ``foreach_batch`` the sink is an in-memory table (returned as a
     DataFrame); with it, each micro-batch is handed to the callable (K3/K4
-    upsert writers, M1 fan-out) and None is returned. A fresh checkpoint dir
-    per run keeps invocations independent (W11: in production the
-    checkpoint is stable and provides exactly-once recovery).
+    upsert writers, M1 fan-out) and None is returned.
+
+    The query runs ``min(spark.sql.shuffle.partitions, defaultParallelism)``
+    shuffle partitions, so as many state-store partitions: each costs a task
+    and a versioned commit per trigger, keyed or not, and AQE never
+    coalesces a stateful exchange. A checkpoint fixes the count for life;
+    each run here gets a fresh, single-use one (W11: in production it is
+    stable), so the count never outlives the cluster it was sized for.
+    ``supervise.run_supervised`` restarts long-lived checkpoints and keeps
+    the session's value.
 
     ``state_store`` ('rocksdb' | 'rocksdb_changelog' | 'hdfs', see
     session.STATE_STORE_PROVIDERS) pins the state store provider for THIS
-    query and restores the session conf after — the provider class is
-    read at query start and recorded in the fresh checkpoint, so per-run
-    pinning is sound. 'rocksdb' is the 100×-state posture: keyed state
-    lives off-heap on local disk instead of on the executor heap.
-    'rocksdb_changelog' additionally enables RocksDB changelog
-    checkpointing (public Spark conf
-    spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled):
-    per-commit checkpoint cost becomes ∝ the batch's state DELTA instead
-    of the state snapshot — the knob that matters when keyed state is
-    large but per-batch churn is small (exactly the D4/D6/join-buffer
-    shape at 100× keys)."""
+    query. 'rocksdb' is the 100x-state posture: keyed state lives off-heap
+    on local disk. 'rocksdb_changelog' adds changelog checkpointing, so a
+    commit costs the batch's state delta instead of a snapshot (large
+    keyed state, small per-batch churn: D4/D6/join buffers). Both pins end
+    when the query has ended or timed out, not at ``start()``: the stream
+    clones the session on its own thread."""
     from gmall_flink_spark.session import STATE_STORE_PROVIDERS
 
     name = f"q{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(_STREAM_TMP, "ckpt", name)
     spark = sdf.sparkSession
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _CHANGELOG_KEY = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    prior_provider = prior_changelog = None
-    changelog = state_store == "rocksdb_changelog"
+    cores = spark.sparkContext.defaultParallelism
+    shuffle = min(int(spark.conf.get("spark.sql.shuffle.partitions")), cores)
+    conf = {"spark.sql.shuffle.partitions": str(shuffle)}
     if state_store is not None:
-        prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-        spark.conf.set(
-            _PROVIDER_KEY,
-            STATE_STORE_PROVIDERS["rocksdb" if changelog else state_store],
-        )
-        if changelog:
-            prior_changelog = spark.conf.get(_CHANGELOG_KEY, None)
-            spark.conf.set(_CHANGELOG_KEY, "true")
+        conf["spark.sql.streaming.stateStore.providerClass"] = STATE_STORE_PROVIDERS[
+            state_store.removesuffix("_changelog")
+        ]
+    if state_store == "rocksdb_changelog":
+        conf["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] = "true"
 
-    def _await(q) -> None:
-        # awaitTermination(timeout) returns False WITHOUT stopping a query
-        # that is still running — returning then would hand back a partial
-        # memory-sink table (or leave a foreachBatch writer mutating sink
-        # state concurrently with the caller)
+    with _session_conf(spark, conf):
+        writer = sdf.writeStream.option("checkpointLocation", ckpt).trigger(availableNow=True)
+        if foreach_batch is None:
+            writer = writer.format("memory").queryName(name).outputMode(output_mode)
+        else:
+            writer = writer.foreachBatch(foreach_batch)
+        q = writer.start()
+        # awaitTermination(timeout) returns False WITHOUT stopping the query:
+        # returning then would hand back a partial memory-sink table (or
+        # leave a foreachBatch writer mutating sink state beside the caller)
         if not q.awaitTermination(timeout_s):
             q.stop()
             raise TimeoutError(f"availableNow run exceeded timeout_s={timeout_s}")
-
-    try:
-        writer = sdf.writeStream.option("checkpointLocation", ckpt).trigger(
-            availableNow=True
-        )
-        if foreach_batch is not None:
-            _await(writer.foreachBatch(foreach_batch).start())
-            return None
-        _await(writer.format("memory").queryName(name).outputMode(output_mode).start())
-        return spark.table(name)
-    finally:
-        if state_store is not None:
-            if prior_provider is None:
-                spark.conf.unset(_PROVIDER_KEY)
-            else:
-                spark.conf.set(_PROVIDER_KEY, prior_provider)
-            if changelog:
-                if prior_changelog is None:
-                    spark.conf.unset(_CHANGELOG_KEY)
-                else:
-                    spark.conf.set(_CHANGELOG_KEY, prior_changelog)
+    return None if foreach_batch is not None else spark.table(name)

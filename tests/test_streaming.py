@@ -125,6 +125,42 @@ def test_first_per_day_stream_matches_batch_keys(spark, events_slices):
     assert rows(got, ["user_id", "cur_date"]) == rows(batch, ["user_id", "cur_date"])
 
 
+def test_run_available_now_sizes_state_partitions_to_cores(spark, events_slices):
+    """A stateful availableNow query keeps one state-store partition per
+    core, not one per session shuffle partition, and hands the session its
+    own shuffle partition count back, also when the query times out."""
+    import time
+
+    from gmall_flink_spark.streaming import core
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    ckpts = os.path.join(core._STREAM_TMP, "ckpt")
+    before = set(os.listdir(ckpts)) if os.path.isdir(ckpts) else set()
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(2 * cores))
+    try:
+        ev = table(spark, SF, "events")
+        sdf = stream_from(spark, events_slices, ev)
+        got = run_available_now(first_per_day_stream(sdf, "user_id"))
+        assert spark.conf.get(key) == str(2 * cores)
+        (ckpt,) = set(os.listdir(ckpts)) - before
+        state = os.path.join(ckpts, ckpt, "state", "0")
+        assert sorted(int(p) for p in os.listdir(state) if p.isdigit()) == list(range(cores))
+        cols = ["user_id", "cur_date", "ts"]
+        assert rows(got, cols) == rows(first_per_day(ev, "user_id"), cols)
+
+        with pytest.raises(TimeoutError):
+            run_available_now(
+                stream_from(spark, events_slices, ev),
+                foreach_batch=lambda df, batch_id: time.sleep(2),
+                timeout_s=0.5,
+            )
+        assert spark.conf.get(key) == str(2 * cores)
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_new_user_flags_stream_matches_batch(spark, events_slices):
     """D5: per-key per-day rows with the first-ever flag — exact match with
     the batch twin (output is key+date+flag, no row ambiguity)."""
@@ -1241,8 +1277,10 @@ def test_upsert_rejects_mismatched_bucket_count(spark):
 
 def test_upsert_rewrites_only_touched_buckets(spark):
     """Bucketed-state contract: a batch containing one key rewrites only
-    that key's bucket directory; every other bucket's files (paths + bytes)
-    are untouched — per-batch I/O tracks the batch, not total state."""
+    that key's bucket directory, as one parquet file; every other bucket's
+    files (paths + bytes) are untouched — per-batch I/O tracks the batch,
+    not total state. The merge into existing state is one hash exchange
+    and no eager count: its job count is pinned."""
     from gmall_flink_spark.sinks.upsert import read_state, upsert_into
 
     state = os.path.join(TMP, "bucketed_upsert_state")
@@ -1262,13 +1300,28 @@ def test_upsert_rewrites_only_touched_buckets(spark):
                 )
         return out
 
+    def parquet_files(bucket_files):
+        return [f for f, _, _ in bucket_files if f.endswith(".parquet")]
+
     before = snapshot()
     assert len(before) > 1, "expected multiple bucket dirs"
+    assert all(len(parquet_files(fs)) == 1 for fs in before.values()), before
     one = ev.orderBy("user_id", "ts", "event_id").limit(1)
-    upsert_into(state, one, ["user_id"], ["ts", "event_id"])
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert_one", "one-row upsert into existing state")
+    try:
+        upsert_into(state, one, ["user_id"], ["ts", "event_id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the touched-bucket collect (which fills the pinned batch: map stage +
+    # result), the prior state's schema read, and the clustered write (map
+    # stage + write) — the per-stage jobs of adaptive execution
+    assert len(sc.statusTracker().getJobIdsForGroup("upsert_one")) == 5
     after = snapshot()
     changed = [b for b in before if before[b] != after.get(b)]
     assert len(changed) == 1, f"expected 1 touched bucket, got {changed}"
+    assert len(parquet_files(after[changed[0]])) == 1
     # and the merge is still correct
     batch = keep_last(ev, ["user_id"], ["ts", "event_id"])
     assert rows(read_state(spark, state)) == rows(batch)
