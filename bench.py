@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -90,6 +91,13 @@ def unsorted_form(df):
     return getattr(df, "_bench_presort", df)
 
 
+#: serializes explain_str: redirect_stdout swaps the process-global
+#: sys.stdout, so two threads capturing at once (the explain audit's
+#: checkpoint hook fires inside warm_concurrently's stage builds) would
+#: write into each other's buffers and leave stdout redirected
+_EXPLAIN_LOCK = threading.Lock()
+
+
 def explain_str(df, mode: str = "simple") -> str:
     """Public-API plan capture: df.explain() routed through stdout
     redirection — no ``_jdf`` reflection, so it survives Spark Connect and
@@ -98,7 +106,7 @@ def explain_str(df, mode: str = "simple") -> str:
     import io
 
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
+    with _EXPLAIN_LOCK, contextlib.redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from gmall_flink_spark.functions.text import tokenize
 from gmall_flink_spark.llm.classify import nb_priors, nb_score, nb_train
-from gmall_flink_spark.sources.tables import table
+from gmall_flink_spark.sources.tables import session_stage, table
 
 #: deterministic hash split: doc_id % NB_HOLDOUT_MOD == 0 is held out for
 #: prediction, everything else trains. Both oracles mirror the rule.
@@ -34,13 +34,10 @@ def _toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session memo for the lang head's scored-holdout frame: TWO queries
+#: session stage for the lang head's scored-holdout frame: TWO queries
 #: (nb_lang_confusion, nb_margin_hist) consume the identical train+score
-#: chain, and without the memo each re-runs the whole thing (guide §2.4).
-#: Keyed like every other memo; wiped by clear_session_memos.
-_NB_SCORED_MEMO: dict[tuple, DataFrame] = {}
-
-
+#: chain, and without the stage each re-runs the whole thing (guide §2.4).
+@session_stage("documents")
 def _scored_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train on doc_id % MOD != 0, score the held-out split; returns the
     per-(doc, class) ranked score frame with the true label attached.
@@ -49,24 +46,19 @@ def _scored_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (token counts, priors distinct, holdout scoring) are
     unshared subtrees to Catalyst and would each re-run the corpus
     tokenize+explode otherwise."""
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _NB_SCORED_MEMO)
-    if key not in _NB_SCORED_MEMO:
-        toks = _toks(spark, sf_dir).localCheckpoint(eager=False)
-        train = toks.where(F.pmod("doc_id", F.lit(NB_HOLDOUT_MOD)) != 0)
-        holdout = toks.where(F.pmod("doc_id", F.lit(NB_HOLDOUT_MOD)) == 0)
-        model = nb_train(train, label_col="lang")
-        priors = nb_priors(
-            train.select("doc_id", "lang").distinct(), label_col="lang"
-        )
-        _NB_SCORED_MEMO[key] = nb_score(
-            holdout.select("doc_id", F.col("lang").alias("true_lang"), "t"),
-            model,
-            priors,
-            keep_cols=("true_lang",),
-        ).localCheckpoint(eager=True)
-    return _NB_SCORED_MEMO[key]
+    toks = _toks(spark, sf_dir).localCheckpoint(eager=False)
+    train = toks.where(F.pmod("doc_id", F.lit(NB_HOLDOUT_MOD)) != 0)
+    holdout = toks.where(F.pmod("doc_id", F.lit(NB_HOLDOUT_MOD)) == 0)
+    model = nb_train(train, label_col="lang")
+    priors = nb_priors(
+        train.select("doc_id", "lang").distinct(), label_col="lang"
+    )
+    return nb_score(
+        holdout.select("doc_id", F.col("lang").alias("true_lang"), "t"),
+        model,
+        priors,
+        keep_cols=("true_lang",),
+    ).localCheckpoint(eager=True)
 
 
 def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,7 +28,7 @@ from gmall_flink_spark.queries.llm_pipeline import (
     URL_TLDS,
     llm_corpus_build,
 )
-from gmall_flink_spark.sources.tables import table
+from gmall_flink_spark.sources.tables import session_stage, table, warm_concurrently
 
 #: link-target synthesis: doc with id i links its own domain to
 #: 'src((i*7+3) % DST_MOD)' under tld index (i%5)%3 — a deterministic,
@@ -203,7 +203,7 @@ def llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session memo of the corpus word-occurrence dictionary
+#: session stage of the corpus word-occurrence dictionary
 #: (source, word, occ) — the tokenize-explode-aggregate pass that the
 #: char-level encode/audit queries (llm_wordpiece_encode,
 #: llm_unigram_encode, llm_unigram_roundtrip) and the WordPiece
@@ -212,72 +212,39 @@ def llm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: shuffle builds it; every consumer re-aggregates the
 #: |source x word|-bounded dictionary. At 100 TB this is the
 #: word-frequency table a tokenizer pipeline materializes exactly once.
-_WORD_OCC: dict[tuple, DataFrame] = {}
-
-#: per-memo build locks (optimization r15): llm_tokenizer_compare warms
-#: the three INDEPENDENT trainer-family memos from a small driver thread
-#: pool (guide §2.6 — overlap independent jobs so one chain's stragglers
-#: back-fill with another chain's tasks). Each memo keeps its
-#: single-threaded build invariant by building UNDER ITS LOCK and
-#: publishing once; different memos build concurrently, the same memo
-#: never does. Sequential callers (every other query) see zero change —
-#: an uncontended lock acquisition per call.
-import threading as _threading
-
-_MEMO_LOCKS: dict[int, _threading.Lock] = {}
-_MEMO_LOCKS_GUARD = _threading.Lock()
-
-
-def _memo_lock(memo: dict) -> _threading.Lock:
-    with _MEMO_LOCKS_GUARD:
-        return _MEMO_LOCKS.setdefault(id(memo), _threading.Lock())
-
-
+@session_stage("documents")
 def _word_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    with _memo_lock(_WORD_OCC):
-        key = memo_key(spark, sf_dir, "documents", _WORD_OCC)
-        if key not in _WORD_OCC:
-            docs = table(spark, sf_dir, "documents")
-            wc = (
-                docs.select("source", F.explode(tokenize("text")).alias("word"))
-                .groupBy("source", "word")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("occ"))
-            )
-            _WORD_OCC[key] = wc.localCheckpoint(eager=True)
-        return _WORD_OCC[key]
+    docs = table(spark, sf_dir, "documents")
+    wc = (
+        docs.select("source", F.explode(tokenize("text")).alias("word"))
+        .groupBy("source", "word")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("occ"))
+    )
+    return wc.localCheckpoint(eager=True)
 
 
-#: session memo of the trained BPE state — (merge table, encoded corpus)
+#: session stage of the trained BPE state — (merge table, encoded corpus)
 #: share the per-round checkpoints across llm_bpe_train / llm_bpe_encode
-_BPE_STATE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+@session_stage("documents")
 def _bpe_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from gmall_flink_spark.llm.bpe import bpe_train_state
-    from gmall_flink_spark.sources.tables import memo_key
 
-    with _memo_lock(_BPE_STATE):
-        key = memo_key(spark, sf_dir, "documents", _BPE_STATE)
-        if key not in _BPE_STATE:
-            docs = table(spark, sf_dir, "documents")
-            toked = docs.select(
-                "doc_id",
-                "source",
-                "lang",
-                F.size(tokenize("text")).cast("bigint").alias("n0"),
-                tokenize("text").alias("l"),
-            )
-            # doc_id rides along so llm_bpe_roundtrip can join the encoded
-            # corpus back to the originals; the trainer never reads carry cols
-            _BPE_STATE[key] = bpe_train_state(
-                toked,
-                "l",
-                rounds=BPE_TRAIN_ROUNDS,
-                carry=("doc_id", "source", "lang", "n0"),
-            )
-        return _BPE_STATE[key]
+    docs = table(spark, sf_dir, "documents")
+    toked = docs.select(
+        "doc_id",
+        "source",
+        "lang",
+        F.size(tokenize("text")).cast("bigint").alias("n0"),
+        tokenize("text").alias("l"),
+    )
+    # doc_id rides along so llm_bpe_roundtrip can join the encoded
+    # corpus back to the originals; the trainer never reads carry cols
+    return bpe_train_state(
+        toked,
+        "l",
+        rounds=BPE_TRAIN_ROUNDS,
+        carry=("doc_id", "source", "lang", "n0"),
+    )
 
 
 def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,41 +300,35 @@ def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: unbiased w.r.t. the synth's doc_id-periodic source/lang attributes.
 BPE_SAMPLE_PCT = 40
 
-#: session memo of the sampled-trained state: (merge table, full corpus
+#: session stage of the sampled-trained state: (merge table, full corpus
 #: encoded with those merges)
-_BPE_SAMPLED: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+@session_stage("documents")
 def _bpe_sampled_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from gmall_flink_spark.llm.bpe import bpe_apply_merges, bpe_train_state
     from gmall_flink_spark.llm.corpus import hash_sample
-    from gmall_flink_spark.sources.tables import memo_key
 
-    key = memo_key(spark, sf_dir, "documents", _BPE_SAMPLED)
-    if key not in _BPE_SAMPLED:
-        docs = table(spark, sf_dir, "documents")
-        toked = docs.select(
-            "doc_id",
-            "lang",
-            F.size(tokenize("text")).cast("bigint").alias("n0"),
-            tokenize("text").alias("l"),
-        )
-        sample = hash_sample(toked, F.col("doc_id"), BPE_SAMPLE_PCT)
-        merges, _ = bpe_train_state(sample, "l", rounds=BPE_TRAIN_ROUNDS)
-        # the merge list IS the shipped artifact — K driver-side rows,
-        # bounded by the round count, never corpus-sized
-        mrows = [
-            (r["round"], r["pair_a"], r["pair_b"], r["pair_ct"])
-            for r in merges.orderBy("round").collect()
-        ]
-        merges_df = spark.createDataFrame(
-            mrows, "round int, pair_a string, pair_b string, pair_ct bigint"
-        )
-        enc = bpe_apply_merges(
-            toked, "l", [(a, b) for _, a, b, _ in mrows], carry=("lang", "n0")
-        )
-        _BPE_SAMPLED[key] = (merges_df, enc)
-    return _BPE_SAMPLED[key]
+    docs = table(spark, sf_dir, "documents")
+    toked = docs.select(
+        "doc_id",
+        "lang",
+        F.size(tokenize("text")).cast("bigint").alias("n0"),
+        tokenize("text").alias("l"),
+    )
+    sample = hash_sample(toked, F.col("doc_id"), BPE_SAMPLE_PCT)
+    merges, _ = bpe_train_state(sample, "l", rounds=BPE_TRAIN_ROUNDS)
+    # the merge list IS the shipped artifact — K driver-side rows,
+    # bounded by the round count, never corpus-sized
+    mrows = [
+        (r["round"], r["pair_a"], r["pair_b"], r["pair_ct"])
+        for r in merges.orderBy("round").collect()
+    ]
+    merges_df = spark.createDataFrame(
+        mrows, "round int, pair_a string, pair_b string, pair_ct bigint"
+    )
+    enc = bpe_apply_merges(
+        toked, "l", [(a, b) for _, a, b, _ in mrows], carry=("lang", "n0")
+    )
+    return merges_df, enc
 
 
 def llm_bpe_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,7 +380,7 @@ def llm_bpe_fertility_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     original whitespace token is the standard measure, e.g. XLM-R's
     tokenizer analyses): the corpus encoded with the merges just trained
     (terminal state of the SAME per-round rewrite chain, shared through
-    the _BPE_STATE session memo), aggregated per LANG instead of per
+    the _bpe_state session stage), aggregated per LANG instead of per
     source. A lang whose ratio_bp stays near 10000 gets no compression —
     the signal to retrain with a rebalanced mix or a bigger vocab.
 
@@ -445,23 +406,16 @@ def llm_bpe_fertility_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
-#: session memo of the sampled-trained unigram-LM vocab (ranked frame) —
+#: session stage of the sampled-trained unigram-LM vocab (ranked frame) —
 #: llm_unigram_train and llm_unigram_encode share one EM run
-_UNIGRAM_VOCAB: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_spark.llm.corpus import hash_sample
     from gmall_flink_spark.llm.unigram import unigram_train, word_counts
-    from gmall_flink_spark.sources.tables import memo_key
 
-    with _memo_lock(_UNIGRAM_VOCAB):
-        key = memo_key(spark, sf_dir, "documents", _UNIGRAM_VOCAB)
-        if key not in _UNIGRAM_VOCAB:
-            docs = table(spark, sf_dir, "documents")
-            words = word_counts(hash_sample(docs, F.col("doc_id"), BPE_SAMPLE_PCT))
-            _UNIGRAM_VOCAB[key] = unigram_train(words)
-        return _UNIGRAM_VOCAB[key]
+    docs = table(spark, sf_dir, "documents")
+    words = word_counts(hash_sample(docs, F.col("doc_id"), BPE_SAMPLE_PCT))
+    return unigram_train(words)
 
 
 def llm_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,10 +1113,6 @@ ORACLE = {
 # words, not occurrences — word frequencies ride along as weights).
 # ---------------------------------------------------------------------------
 
-#: session memo of the trained WordPiece state — (merge table, vocab dict)
-_WP_STATE: dict[tuple, tuple[DataFrame, dict]] = {}
-
-
 def _wp_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-cap (word, wcount) — a re-aggregation of the shared
     (source, word, occ) frame (optimization r14, guide §2.4): the
@@ -1180,8 +1130,9 @@ def _wp_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_stage("documents")
 def _wp_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
-    """(merge table, vocab dict) memo. Training words = in-cap words whose
+    """(merge table, vocab dict) session stage. Training words = in-cap words whose
     every char is inside the LIMITED alphabet (llm/wordpiece.py: the
     limit_alphabet contract — a word containing a dropped char could
     never contribute an emittable piece); the vocab alphabet is that
@@ -1193,20 +1144,15 @@ def _wp_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
         limited_alphabet,
         wordpiece_train_state,
     )
-    from gmall_flink_spark.sources.tables import memo_key
 
-    with _memo_lock(_WP_STATE):
-        key = memo_key(spark, sf_dir, "documents", _WP_STATE)
-        if key not in _WP_STATE:
-            words = _wp_words(spark, sf_dir).localCheckpoint(eager=True)
-            alpha = limited_alphabet(words)
-            train_words = words.where(
-                F.length(F.translate(F.col("word"), "".join(alpha), "")) == 0
-            )
-            merges, _ = wordpiece_train_state(train_words, WP_TRAIN_ROUNDS)
-            merges = merges.localCheckpoint(eager=True)
-            _WP_STATE[key] = (merges, collect_vocab(alpha, merges))
-        return _WP_STATE[key]
+    words = _wp_words(spark, sf_dir).localCheckpoint(eager=True)
+    alpha = limited_alphabet(words)
+    train_words = words.where(
+        F.length(F.translate(F.col("word"), "".join(alpha), "")) == 0
+    )
+    merges, _ = wordpiece_train_state(train_words, WP_TRAIN_ROUNDS)
+    merges = merges.localCheckpoint(eager=True)
+    return merges, collect_vocab(alpha, merges)
 
 
 def llm_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1512,28 +1458,16 @@ def llm_tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer chains are INDEPENDENT (BPE merge loop, WordPiece likelihood
     loop, unigram EM), and each is a sequence of small driver-synced
     rounds that leaves most executors idle between jobs — so the compare
-    card warms the three memos from a 3-thread driver pool before
-    composing. Each memo still builds single-threaded under its own lock
-    (build once, publish once — _memo_lock); the pool only overlaps
-    DIFFERENT chains' jobs, which Spark's FIFO scheduler back-fills onto
-    idle executors. With warm memos the pool is three no-op lookups."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        from pyspark import inheritable_thread_target as _itt
-    except ImportError:  # pragma: no cover - older Spark
-        def _itt(f):
-            return f
-
-    warmers = [
+    card warms the three stages concurrently (warm_concurrently) before
+    composing. Each stage still builds once, under its own session_stage
+    lock; the pool only overlaps DIFFERENT chains' jobs, which Spark's
+    FIFO scheduler back-fills onto idle executors. With warm stages the
+    pool is three no-op lookups."""
+    warm_concurrently(
         lambda: _bpe_state(spark, sf_dir),
         lambda: _wp_state(spark, sf_dir),
         lambda: _unigram_vocab(spark, sf_dir),
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(_itt(w)) for w in warmers]
-        for fut in futures:
-            fut.result()  # surface any build error before composing
+    )
 
     b = llm_bpe_encode(spark, sf_dir).agg(
         F.sum("tok_before").cast("bigint").alias("input_units"),

@@ -30,7 +30,7 @@ from gmall_flink_spark.llm.substring import (
     SUBSTR_W,
     dup_span_stats,
 )
-from gmall_flink_spark.sources.tables import table
+from gmall_flink_spark.sources.tables import session_stage, table, warm_concurrently
 
 MINHASH_K = 12
 ROWS_PER_BAND = 3
@@ -70,46 +70,31 @@ def dedup_exact_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: tokenized documents (doc_id, toks array), memoized per (session, sf_dir,
-#: content stamp — sources.tables.memo_key): the scan + tokenize stage feeds
-#: the token-unit explode (minhash/jaccard-verify) AND the 3-gram shingle
-#: explode (ngram_jaccard_stats); one eager localCheckpoint serves both, so
-#: the corpus is scanned and tokenized exactly once per session.
-_DOC_TOKS: dict[tuple, DataFrame] = {}
-
-
+#: tokenized documents (doc_id, toks array), a session stage: the scan +
+#: tokenize stage feeds the token-unit explode (minhash/jaccard-verify) AND
+#: the 3-gram shingle explode (ngram_jaccard_stats); one eager
+#: localCheckpoint serves both, so the corpus is scanned and tokenized
+#: exactly once per session.
+@session_stage("documents")
 def _doc_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _DOC_TOKS)
-    if key not in _DOC_TOKS:
-        toked = doc_tokens(table(spark, sf_dir, "documents"))
-        _DOC_TOKS[key] = toked.localCheckpoint(eager=True)
-    return _DOC_TOKS[key]
+    return doc_tokens(table(spark, sf_dir, "documents")).localCheckpoint(eager=True)
 
 
-#: distinct (doc_id, token) units, memoized like _doc_toks: the unit
+#: distinct (doc_id, token) units, a session stage like _doc_toks: the unit
 #: explode feeds BOTH the minhash-signature path and the jaccard verify in
 #: every LSH query, and Catalyst plans each reference as its own explode;
 #: one eager localCheckpoint serves them all (the same shared-stage pattern
 #: as _components / _winnow_docs).
-_DOC_UNITS: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _doc_units(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _DOC_UNITS)
-    if key not in _DOC_UNITS:
-        units = _doc_toks(spark, sf_dir).select(
-            "doc_id", F.explode(F.array_distinct("toks")).alias("shingle")
-        )
-        _DOC_UNITS[key] = units.localCheckpoint(eager=True)
-    return _DOC_UNITS[key]
+    units = _doc_toks(spark, sf_dir).select(
+        "doc_id", F.explode(F.array_distinct("toks")).alias("shingle")
+    )
+    return units.localCheckpoint(eager=True)
 
 
-#: WIDE minhash signature matrix (doc_id, _m0.._m{k-1}), memoized like
-#: _doc_units: the signature groupBy is the one shuffle every banding
+#: WIDE minhash signature matrix (doc_id, _m0.._m{k-1}), a session stage
+#: like _doc_units: the signature groupBy is the one shuffle every banding
 #: pays, and both band widths of the two-level candidate rule PLUS the
 #: bucket report (minhash_band_buckets) are map-only projections of this
 #: one frame (llm/dedup.matrix_bands) — so the matrix is aggregated
@@ -122,42 +107,28 @@ def _doc_units(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (minhash_band_buckets) stop paying for aggregates they don't read.
 #: At production scale this is the persisted signature table of the
 #: dedup index.
-_MINHASH_MX: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _minhash_mx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _MINHASH_MX)
-    if key not in _MINHASH_MX:
-        mx = minhash_matrix(_doc_units(spark, sf_dir), MINHASH_K)
-        _MINHASH_MX[key] = mx.localCheckpoint(eager=True)
-    return _MINHASH_MX[key]
+    mx = minhash_matrix(_doc_units(spark, sf_dir), MINHASH_K)
+    return mx.localCheckpoint(eager=True)
 
 
 #: (doc_id, n, setfp) derived map-only from the token arrays (see
-#: llm.dedup.doc_set_stats), memoized with a LAZY localCheckpoint: the
+#: llm.dedup.doc_set_stats), a session stage with a LAZY localCheckpoint: the
 #: frame is referenced several times inside exact_fingerprint_pairs and
 #: the verify join, and each unshared reference would otherwise re-run
 #: the doc-text-sized sort+concat+md5 map per doc (measured ~35% on the
 #: simhash card when left unshared). Checkpointed it computes once per
 #: session at first action; lazy, so plan-only consumers stay jobless.
-_DOC_STATS: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_spark.llm.dedup import doc_set_stats
-    from gmall_flink_spark.sources.tables import memo_key
 
-    key = memo_key(spark, sf_dir, "documents", _DOC_STATS)
-    if key not in _DOC_STATS:
-        _DOC_STATS[key] = doc_set_stats(_doc_toks(spark, sf_dir)).localCheckpoint(
-            eager=False
-        )
-    return _DOC_STATS[key]
+    return doc_set_stats(_doc_toks(spark, sf_dir)).localCheckpoint(eager=False)
 
 
-#: two-level LSH candidate pairs, memoized like the other shared stages:
+#: two-level LSH candidate pairs, a session stage like the other shared
+#: stages:
 #: the verified pair graph builds on them and lsh_recall_audit scores the
 #: SAME production candidate rule — one banding pipeline serves both.
 #: oversize_fine="star" since r14 (VERDICT r13 task 2, decided on the sf1
@@ -166,58 +137,36 @@ def _doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: downstream like every candidate, linear cost, and the component-level
 #: co-membership recall of the exact closure at the sf1 construction rose
 #: 1.2% -> 6.3% at 98.2% pair precision for ~zero wall cost.
-_LSH_CANDS: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _lsh_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _LSH_CANDS)
-    if key not in _LSH_CANDS:
-        cands = lsh_candidates_two_level(
-            _minhash_mx(spark, sf_dir),
-            ROWS_PER_BAND,
-            FINE_ROWS_PER_BAND,
-            max_bucket=LSH_MAX_BUCKET,
-            oversize_fine="star",
-        )
-        _LSH_CANDS[key] = cands.localCheckpoint(eager=True)
-    return _LSH_CANDS[key]
+    cands = lsh_candidates_two_level(
+        _minhash_mx(spark, sf_dir),
+        ROWS_PER_BAND,
+        FINE_ROWS_PER_BAND,
+        max_bucket=LSH_MAX_BUCKET,
+        oversize_fine="star",
+    )
+    return cands.localCheckpoint(eager=True)
 
 
-#: identical-document pair graph (token-set-fingerprint pre-pass), memoized
-#: like the other shared stages: both the verified MinHash pair graph and
+#: identical-document pair graph (token-set-fingerprint pre-pass), a session
+#: stage like the other shared stages: both the verified MinHash pair graph and
 #: lsh_recall_audit union it in (VERDICT r13 weak #1 — identical documents
 #: share every band value, so the capped banded index is structurally blind
 #: to exactly the heaviest duplicates; the SimHash family routed around the
 #: cap this way in r10 and the sf1 audit showed MinHash losing 22,423/22,450
 #: exact pairs without it)
-_EXACT_PAIRS: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
+    # the fingerprint is a MAP-ONLY projection of the token arrays
+    # (optimization r15 — no aggregation at all); the pair expansion
+    # here only touches the per-doc fp frame, never the units
+    fp = _doc_stats(spark, sf_dir).select("doc_id", "setfp")
+    pairs = exact_fingerprint_pairs(None, fp=fp).select(
+        F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b")
+    )
+    return pairs.localCheckpoint(eager=True)
 
-    key = memo_key(spark, sf_dir, "documents", _EXACT_PAIRS)
-    if key not in _EXACT_PAIRS:
-        # the fingerprint is a MAP-ONLY projection of the token arrays
-        # (optimization r15 — no aggregation at all); the pair expansion
-        # here only touches the per-doc fp frame, never the units
-        fp = _doc_stats(spark, sf_dir).select("doc_id", "setfp")
-        pairs = exact_fingerprint_pairs(None, fp=fp).select(
-            F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b")
-        )
-        _EXACT_PAIRS[key] = pairs.localCheckpoint(eager=True)
-    return _EXACT_PAIRS[key]
-
-
-#: verified near-dup pair graph (LSH candidates -> exact jaccard, j >= 0.9,
-#: UNION the exact-fingerprint pre-pass at jaccard 1 by construction),
-#: memoized like _doc_units/_components: minhash_lsh_pairs, the component
-#: pipeline, and dedup_cross_source all consume the SAME verify join — the
-#: suite's third-heaviest stage — so it runs once per (session, sf_dir,
-#: content stamp), and the j-threshold lives in exactly one place.
-_VERIFIED: dict[tuple, DataFrame] = {}
 
 #: exact-jaccard verify threshold j >= VERIFY_J_NUM/VERIFY_J_DEN for the
 #: LSH-candidate pair graph — hoisted out of _verified_pairs' body so the
@@ -228,62 +177,50 @@ VERIFY_J_NUM = 9
 VERIFY_J_DEN = 10
 
 
+#: verified near-dup pair graph (LSH candidates -> exact jaccard, j >= 0.9,
+#: UNION the exact-fingerprint pre-pass at jaccard 1 by construction), a
+#: session stage like _doc_units/_components: minhash_lsh_pairs, the
+#: component pipeline, and dedup_cross_source all consume the SAME verify
+#: join — the suite's third-heaviest stage — so it runs once per (session,
+#: sf_dir, content stamp), and the j-threshold lives in exactly one place.
+@session_stage("documents")
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _VERIFIED)
-    if key not in _VERIFIED:
-        units = _doc_units(spark, sf_dir)
-        # guide §2.6 overlap (optimization r15): the candidate banding
-        # (matrix -> two-level buckets) and the exact-fingerprint
-        # pre-pass (doc stats -> fp self-join) are INDEPENDENT chains of
-        # small driver-synced jobs over DISJOINT memos once the shared
-        # token parents above exist ({_MINHASH_MX, _LSH_CANDS} vs
-        # {_DOC_STATS, _EXACT_PAIRS}) — built sequentially they leave
-        # executors idle between jobs, so a cold call warms both from a
-        # 2-thread pool (the llm_tokenizer_compare trainer-chain
-        # pattern). Warm-memo calls resolve as two dict lookups.
-        from concurrent.futures import ThreadPoolExecutor
-
-        try:
-            from pyspark import inheritable_thread_target as _itt
-        except ImportError:  # pragma: no cover - older Spark
-            def _itt(f):
-                return f
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_cands = pool.submit(_itt(lambda: _lsh_cands(spark, sf_dir)))
-            f_exact = pool.submit(_itt(lambda: _exact_pairs(spark, sf_dir)))
-            cands = f_cands.result()
-            f_exact.result()  # surface any build error before composing
-        # per-doc sizes are a MAP-ONLY projection of the token arrays
-        # (optimization r15): zero shuffles for the verify join's
-        # length-ratio prune AND the exact path below
-        sizes = _doc_stats(spark, sf_dir).select("doc_id", "n")
-        # ratio=(NUM, DEN) is the lossless length prune for the j >= NUM/DEN
-        # threshold below — identical verified output, fewer unit joins
-        jac = jaccard_pairs(
-            units, cands, ratio=(VERIFY_J_NUM, VERIFY_J_DEN), sizes=sizes
-        )
-        lsh_verified = jac.where(
-            VERIFY_J_DEN * F.col("inter") >= VERIFY_J_NUM * F.col("uni")
-        ).select("doc_a", "doc_b", "inter", "uni")
-        # exact-fingerprint pre-pass (VERDICT r13 weak #1): identical token
-        # sets have inter == uni == |set| by construction, so the pairs skip
-        # the verify join entirely — one sizes lookup on doc_a suffices
-        # (doc_b's set is identical). verify(cands ∪ exact) == verify(cands)
-        # ∪ exact, which is what the oracle's unioned _CANDS computes; a pair
-        # both paths find carries identical (inter, uni), so DISTINCT over
-        # all four columns collapses it.
-        exact = (
-            _exact_pairs(spark, sf_dir)
-            .join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-            .select("doc_a", "doc_b", F.col("n").alias("inter"), F.col("n").alias("uni"))
-        )
-        _VERIFIED[key] = (
-            lsh_verified.unionByName(exact).distinct().localCheckpoint(eager=True)
-        )
-    return _VERIFIED[key]
+    units = _doc_units(spark, sf_dir)
+    # guide §2.6 overlap (optimization r15): the candidate banding
+    # (matrix -> two-level buckets) and the exact-fingerprint
+    # pre-pass (doc stats -> fp self-join) are INDEPENDENT chains of
+    # small driver-synced jobs over DISJOINT stages once the shared
+    # token parents above exist ({_minhash_mx, _lsh_cands} vs
+    # {_doc_stats, _exact_pairs}) — built sequentially they leave
+    # executors idle between jobs, so a cold build warms both
+    # concurrently (the llm_tokenizer_compare trainer-chain pattern).
+    cands, exact_pairs = warm_concurrently(
+        lambda: _lsh_cands(spark, sf_dir), lambda: _exact_pairs(spark, sf_dir)
+    )
+    # per-doc sizes are a MAP-ONLY projection of the token arrays
+    # (optimization r15): zero shuffles for the verify join's
+    # length-ratio prune AND the exact path below
+    sizes = _doc_stats(spark, sf_dir).select("doc_id", "n")
+    # ratio=(NUM, DEN) is the lossless length prune for the j >= NUM/DEN
+    # threshold below — identical verified output, fewer unit joins
+    jac = jaccard_pairs(
+        units, cands, ratio=(VERIFY_J_NUM, VERIFY_J_DEN), sizes=sizes
+    )
+    lsh_verified = jac.where(
+        VERIFY_J_DEN * F.col("inter") >= VERIFY_J_NUM * F.col("uni")
+    ).select("doc_a", "doc_b", "inter", "uni")
+    # exact-fingerprint pre-pass (VERDICT r13 weak #1): identical token
+    # sets have inter == uni == |set| by construction, so the pairs skip
+    # the verify join entirely — one sizes lookup on doc_a suffices
+    # (doc_b's set is identical). verify(cands ∪ exact) == verify(cands)
+    # ∪ exact, which is what the oracle's unioned _CANDS computes; a pair
+    # both paths find carries identical (inter, uni), so DISTINCT over
+    # all four columns collapses it.
+    exact = (
+        exact_pairs.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+        .select("doc_a", "doc_b", F.col("n").alias("inter"), F.col("n").alias("uni"))
+    )
+    return lsh_verified.unionByName(exact).distinct().localCheckpoint(eager=True)
 
 
 def dedup_containment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,15 +319,6 @@ def ngram_jaccard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-doc near-dup component mapping, memoized per (SparkContext, sf_dir,
-#: content stamp — see sources.tables.memo_key): dedup_components and
-#: dedup_rep_select consume the same LSH → verify → connected-components
-#: pipeline (the suite's third-heaviest stage); at production scale the
-#: mapping is a persisted table both read. A recreated session or an
-#: in-session rewrite of documents.parquet rebuilds instead of serving a
-#: dead/stale DF.
-_COMPONENTS: dict[tuple, DataFrame] = {}
-
 #: bucket count of the persisted component-mapping artifact (doc_id-hashed
 #: directories via sinks/_bucketed.py — the layout the MERGE sinks use, so
 #: an incremental maintainer can later merge into the same table)
@@ -406,8 +334,10 @@ def _components_stamp(sf_dir: str) -> str:
     (ADVICE r10 #1): llm/dedup.py (minhash/banding/jaccard/components
     kernels), this module's producer functions (_doc_toks .. _verified_pairs
     — the inline 9/10 verify threshold and the two-level candidate
-    composition live there), the tokenize rule in functions/text.py that
-    defines what a token unit IS, and the LSH/banding constants."""
+    composition live there; ``inspect.getsource`` follows each
+    session_stage wrapper's ``__wrapped__`` to the builder's own body),
+    the tokenize rule in functions/text.py that defines what a token unit
+    IS, and the LSH/banding constants."""
     import hashlib
     import inspect
     import os as _os
@@ -454,6 +384,11 @@ def _components_artifact_path(sf_dir: str) -> str:
     )
 
 
+#: per-doc near-dup component mapping, a session stage over the persisted
+#: artifact: dedup_components, dedup_rep_select and four more consumers
+#: read the same LSH → verify → connected-components pipeline (the
+#: suite's third-heaviest stage).
+@session_stage("documents")
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup component mapping, as a WRITE-ONCE bucketed table
     artifact (VERDICT r09 task 8): the iterative connected-components run
@@ -461,7 +396,7 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     producer code) and lands under CACHE_ROOT as a doc_id-bucketed parquet
     state dir; every later consumer — six queries share this mapping —
     cold-reads the table instead of re-running the iteration, across
-    sessions, not just within one. The session memo stays as an L1 over
+    sessions, not just within one. The session stage stays as an L1 over
     the artifact read. Invalidation is content-stamped
     (_components_stamp), never manual."""
     import shutil
@@ -473,36 +408,30 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_state,
         with_bucket,
     )
-    from gmall_flink_spark.sources.tables import memo_key
 
-    key = memo_key(spark, sf_dir, "documents", _COMPONENTS)
-    if key not in _COMPONENTS:
-        path = _components_artifact_path(sf_dir)
-        empty_marker = os.path.join(path, "_EMPTY")
-        if not os.path.exists(path):
-            edges = _verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
-            mapping = connected_components(edges)
-            tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}__"
-            # one file per bucket (16), not one per upstream task and
-            # bucket (496 files for a 1.8k-row mapping at sf0.1: 2-6 s to
-            # write, 0.4-0.8 s to read, against 0.6 s and half the read) —
-            # the layout the incremental merger and every cold read scan.
-            bucketed = with_bucket(mapping, ["doc_id"], COMPONENTS_N_BUCKETS)
-            cluster_by_bucket(bucketed).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-            if not any(n.startswith("__bucket=") for n in os.listdir(tmp)):
-                open(os.path.join(tmp, "_EMPTY"), "w").close()
-            with open(os.path.join(tmp, "_N_BUCKETS"), "w") as fh:
-                fh.write(str(COMPONENTS_N_BUCKETS))
-            try:
-                os.rename(tmp, path)  # losers of a build race read the winner
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.exists(empty_marker):
-            df = spark.createDataFrame([], "doc_id bigint, component bigint")
-        else:
-            df = read_state(spark, path)
-        _COMPONENTS[key] = df
-    return _COMPONENTS[key]
+    path = _components_artifact_path(sf_dir)
+    empty_marker = os.path.join(path, "_EMPTY")
+    if not os.path.exists(path):
+        edges = _verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        mapping = connected_components(edges)
+        tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}__"
+        # one file per bucket (16), not one per upstream task and
+        # bucket (496 files for a 1.8k-row mapping at sf0.1: 2-6 s to
+        # write, 0.4-0.8 s to read, against 0.6 s and half the read) —
+        # the layout the incremental merger and every cold read scan.
+        bucketed = with_bucket(mapping, ["doc_id"], COMPONENTS_N_BUCKETS)
+        cluster_by_bucket(bucketed).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
+        if not any(n.startswith("__bucket=") for n in os.listdir(tmp)):
+            open(os.path.join(tmp, "_EMPTY"), "w").close()
+        with open(os.path.join(tmp, "_N_BUCKETS"), "w") as fh:
+            fh.write(str(COMPONENTS_N_BUCKETS))
+        try:
+            os.rename(tmp, path)  # losers of a build race read the winner
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+    if os.path.exists(empty_marker):
+        return spark.createDataFrame([], "doc_id bigint, component bigint")
+    return read_state(spark, path)
 
 
 def merge_components_artifact(
@@ -726,23 +655,15 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: duplicated-gram index (gram_key, keeper), memoized like _doc_toks: the
+#: duplicated-gram index (gram_key, keeper), a session stage like _doc_toks: the
 #: corpus-wide W-gram aggregation feeds all three substr_* queries; one
 #: eager localCheckpoint pays the dominant shuffle once per session.
-_SUBSTR_IDX: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _substr_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_spark.llm.substring import gram_index, position_grams
-    from gmall_flink_spark.sources.tables import memo_key
 
-    key = memo_key(spark, sf_dir, "documents", _SUBSTR_IDX)
-    if key not in _SUBSTR_IDX:
-        pg = position_grams(_doc_toks(spark, sf_dir), w=SUBSTR_W)
-        _SUBSTR_IDX[key] = gram_index(
-            pg, min_occ=SUBSTR_MIN_OCC
-        ).localCheckpoint(eager=True)
-    return _SUBSTR_IDX[key]
+    pg = position_grams(_doc_toks(spark, sf_dir), w=SUBSTR_W)
+    return gram_index(pg, min_occ=SUBSTR_MIN_OCC).localCheckpoint(eager=True)
 
 
 def substr_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1374,29 +1295,22 @@ def simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: verified j >= 0.9 pairs of the AUDIT_MOD sample via exact prefix
-#: filtering, memoized like the other shared stages: dedup_allpairs_exact
+#: filtering, a session stage like the other shared stages: dedup_allpairs_exact
 #: reports the graph's statistics and dedup_components_exact clusters it —
 #: the sampled exact pipeline runs once per (session, sf_dir, stamp).
-_SAMPLE_EXACT: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _sample_exact_jac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _SAMPLE_EXACT)
-    if key not in _SAMPLE_EXACT:
-        sampled = F.pmod(F.col("doc_id"), F.lit(AUDIT_MOD)) == 0
-        units = _doc_units(spark, sf_dir).where(sampled)
-        cands = prefix_filter_candidates(units, 9, 10)
-        # per-doc sizes are the map-only token-array stats (optimization
-        # r15): the sample filter only drops DOCS, so each surviving doc's
-        # distinct-unit count is unchanged — no sampled-units groupBy
-        sizes = _doc_stats(spark, sf_dir).where(sampled).select("doc_id", "n")
-        jac = jaccard_pairs(units, cands, ratio=(9, 10), sizes=sizes).where(
-            10 * F.col("inter") >= 9 * F.col("uni")
-        )
-        _SAMPLE_EXACT[key] = jac.localCheckpoint(eager=True)
-    return _SAMPLE_EXACT[key]
+    sampled = F.pmod(F.col("doc_id"), F.lit(AUDIT_MOD)) == 0
+    units = _doc_units(spark, sf_dir).where(sampled)
+    cands = prefix_filter_candidates(units, 9, 10)
+    # per-doc sizes are the map-only token-array stats (optimization
+    # r15): the sample filter only drops DOCS, so each surviving doc's
+    # distinct-unit count is unchanged — no sampled-units groupBy
+    sizes = _doc_stats(spark, sf_dir).where(sampled).select("doc_id", "n")
+    jac = jaccard_pairs(units, cands, ratio=(9, 10), sizes=sizes).where(
+        10 * F.col("inter") >= 9 * F.col("uni")
+    )
+    return jac.localCheckpoint(eager=True)
 
 
 def dedup_allpairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1426,21 +1340,12 @@ def dedup_allpairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: components of the sampled exact graph, memoized: the decision ledger
+#: components of the sampled exact graph, a session stage: the decision ledger
 #: and the cluster-aware split fix both cluster the same sampled edges.
-_SAMPLE_COMPONENTS: dict[tuple, DataFrame] = {}
-
-
+@session_stage("documents")
 def _sample_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _SAMPLE_COMPONENTS)
-    if key not in _SAMPLE_COMPONENTS:
-        edges = _sample_exact_jac(spark, sf_dir).select("doc_a", "doc_b")
-        _SAMPLE_COMPONENTS[key] = connected_components(edges).localCheckpoint(
-            eager=True
-        )
-    return _SAMPLE_COMPONENTS[key]
+    edges = _sample_exact_jac(spark, sf_dir).select("doc_a", "doc_b")
+    return connected_components(edges).localCheckpoint(eager=True)
 
 
 def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,7 +20,7 @@ from gmall_flink_spark.llm.corpus import (
 )
 from gmall_flink_spark.llm.dedup import word_shingles
 from gmall_flink_spark.llm.similarity import prep, with_norm
-from gmall_flink_spark.sources.tables import table
+from gmall_flink_spark.sources.tables import session_stage, table
 
 NGRAM_N = 5
 BENCH_MOD = 97
@@ -205,30 +205,22 @@ def llm_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session memo for the per-doc clean verdicts: TWO headline queries
+#: session stage for the per-doc clean verdicts: TWO headline queries
 #: (llm_clean_corpus, llm_corpus_build) consume the identical quality →
-#: decontaminate → dedup chain; without the memo each re-runs the whole
-#: decontamination join (guide §2.4). Wiped by clear_session_memos.
-_CLEAN_RANKED: dict[tuple, DataFrame] = {}
-
-
+#: decontaminate → dedup chain; without the stage each re-runs the whole
+#: decontamination join (guide §2.4).
+@session_stage("documents")
 def _clean_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The clean pipeline's per-doc verdict frame (source, doc_id, tok,
     q_ok, contam, dup): quality rules → decontamination → prefix-fp dedup
     flags, in drop order. Shared by llm_clean_corpus (the drop ledger)
-    and llm_corpus_build (the full epoch-construction composition) —
-    session-memoized for the two consumers. Inside one build, ``flagged``
+    and llm_corpus_build (the full epoch-construction composition). Inside one build, ``flagged``
     feeds BOTH the dup-ranking branch and the final verdict join; as
     unshared subtrees Catalyst would run the quality + decontamination
     chain twice per execution, so it is localCheckpointed first (the
     frame is one row per doc — verdict columns only, never text)."""
     from gmall_flink_spark.functions.text import fingerprint, gopher_keep, tokenize
-    from gmall_flink_spark.sources.tables import memo_key
     from pyspark.sql import Window
-
-    key = memo_key(spark, sf_dir, "documents", _CLEAN_RANKED)
-    if key in _CLEAN_RANKED:
-        return _CLEAN_RANKED[key]
 
     docs = table(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") % BENCH_MOD == 0)
@@ -259,12 +251,11 @@ def _clean_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") > 1)
         .select("doc_id", F.lit(True).alias("dup"))
     )
-    _CLEAN_RANKED[key] = (
+    return (
         flagged.join(dups, "doc_id", "left")
         .withColumn("dup", F.coalesce("dup", F.lit(False)))
         .localCheckpoint(eager=True)
     )
-    return _CLEAN_RANKED[key]
 
 
 def llm_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,21 +411,15 @@ def _pack_shards(total_tokens: int) -> int:
     return max(1, (int(total_tokens) + PACK_SHARD_TOKENS - 1) // PACK_SHARD_TOKENS)
 
 
-#: corpus token total, memoized per (session, sf_dir, content stamp) so the
-#: shard-sizing pre-aggregation runs its corpus scan once per session, not
-#: once per llm_pack_sequences invocation (bench warm pass, probe, plan
-#: inspections would otherwise each pay — and trigger — a real Spark job
-#: at DataFrame-construction time)
-_PACK_TOTALS: dict[tuple, int] = {}
-
-
-def _pack_total_tokens(spark: SparkSession, base: DataFrame, sf_dir: str) -> int:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "documents", _PACK_TOTALS)
-    if key not in _PACK_TOTALS:
-        _PACK_TOTALS[key] = base.agg(F.sum("tok")).first()[0] or 0
-    return _PACK_TOTALS[key]
+#: corpus token total, a session stage so the shard-sizing pre-aggregation
+#: runs its corpus scan once per session, not once per llm_pack_sequences
+#: invocation (bench warm pass, probe, plan inspections would otherwise
+#: each pay — and trigger — a real Spark job at DataFrame-construction
+#: time). ``base`` is not part of the key: it is always the same
+#: documents-derived frame.
+@session_stage("documents")
+def _pack_total_tokens(spark: SparkSession, sf_dir: str, base: DataFrame) -> int:
+    return base.agg(F.sum("tok")).first()[0] or 0
 
 #: deterministic split thresholds over 100 hash buckets: train <90, val <95,
 #: test otherwise.
@@ -474,7 +459,7 @@ def llm_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = table(spark, sf_dir, "documents").select(
         "source", "doc_id", token_count("text").alias("tok")
     )
-    shards = _pack_shards(_pack_total_tokens(spark, base, sf_dir))
+    shards = _pack_shards(_pack_total_tokens(spark, sf_dir, base))
     docs = base.select(
         "source",
         F.pmod(F.col("doc_id"), F.lit(shards)).alias("shard"),

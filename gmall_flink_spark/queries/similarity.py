@@ -16,7 +16,7 @@ from gmall_flink_spark.llm.similarity import (
     prep,
     with_norm,
 )
-from gmall_flink_spark.sources.tables import table
+from gmall_flink_spark.sources.tables import session_stage, table
 
 N_QUERIES = 5
 N_CENTROIDS = 10
@@ -73,39 +73,26 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: cluster-blocked cosine near-dup pairs (cos >= 0.3), memoized per
-#: (session, sf_dir, content stamp) like the LSH pair graph: embed_near_dup
-#: reports the pairs and embed_semdedup_drops turns them into per-cluster
-#: keep/drop decisions — one blocked pair scan serves both.
-_NEARDUP_PAIRS: dict[tuple, DataFrame] = {}
-
-#: the seed-centroid assignment frame feeding the pair scan, memoized too:
+#: the seed-centroid assignment frame feeding the pair scan, a session stage:
 #: the semdedup ledger needs per-cluster member counts and would otherwise
 #: re-run the vectors-x-centroids scoring its docstring promises it skips
-_ASSIGNED_MEMO: dict[tuple, DataFrame] = {}
-
-
+@session_stage("embeddings")
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "embeddings", _ASSIGNED_MEMO)
-    if key not in _ASSIGNED_MEMO:
-        emb = prep(table(spark, sf_dir, "embeddings"))
-        assigned = ivf_assign(emb, emb.where(F.col("vec_id") < N_CENTROIDS))
-        _ASSIGNED_MEMO[key] = assigned.localCheckpoint(eager=True)
-    return _ASSIGNED_MEMO[key]
+    emb = prep(table(spark, sf_dir, "embeddings"))
+    assigned = ivf_assign(emb, emb.where(F.col("vec_id") < N_CENTROIDS))
+    return assigned.localCheckpoint(eager=True)
 
 
+#: cluster-blocked cosine near-dup pairs (cos >= 0.3), a session stage like
+#: the LSH pair graph: embed_near_dup reports the pairs and
+#: embed_semdedup_drops turns them into per-cluster keep/drop decisions —
+#: one blocked pair scan serves both.
+@session_stage("embeddings")
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_spark.sources.tables import memo_key
-
-    key = memo_key(spark, sf_dir, "embeddings", _NEARDUP_PAIRS)
-    if key not in _NEARDUP_PAIRS:
-        pairs = near_dup_pairs(
-            _ivf_assigned(spark, sf_dir), threshold=0.3, block_col="cluster"
-        )
-        _NEARDUP_PAIRS[key] = pairs.localCheckpoint(eager=True)
-    return _NEARDUP_PAIRS[key]
+    pairs = near_dup_pairs(
+        _ivf_assigned(spark, sf_dir), threshold=0.3, block_col="cluster"
+    )
+    return pairs.localCheckpoint(eager=True)
 
 
 def embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,9 +1010,8 @@ PQ_TOPK = 5
 #: ADC shortlist width for the rerank pipeline (sim_pq_rerank)
 PQ_SHORTLIST = 50
 
-_PQ_BOOKS_MEMO: dict[tuple, DataFrame] = {}
 
-
+@session_stage("embeddings")
 def _pq_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained PQ codebooks, eagerly pinned and session-memoized: the
     (sub, code, cvec) table is m*ksub rows, but its lineage is the whole
@@ -1034,15 +1020,9 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir, content stamp). At production scale this is the persisted
     codebook table an index build writes once."""
     from gmall_flink_spark.llm.similarity import pq_train
-    from gmall_flink_spark.sources.tables import memo_key
 
-    key = memo_key(spark, sf_dir, "embeddings", _PQ_BOOKS_MEMO)
-    if key not in _PQ_BOOKS_MEMO:
-        emb = prep(table(spark, sf_dir, "embeddings"))
-        _PQ_BOOKS_MEMO[key] = pq_train(
-            emb, PQ_M, PQ_DSUB, PQ_KSUB, iterations=1
-        ).localCheckpoint(eager=True)
-    return _PQ_BOOKS_MEMO[key]
+    emb = prep(table(spark, sf_dir, "embeddings"))
+    return pq_train(emb, PQ_M, PQ_DSUB, PQ_KSUB, iterations=1).localCheckpoint(eager=True)
 
 
 def sim_pq_code_hist(spark: SparkSession, sf_dir: str) -> DataFrame:

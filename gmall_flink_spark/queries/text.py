@@ -16,7 +16,7 @@ from gmall_flink_spark.functions.text import (
     stopword_count,
     tokenize,
 )
-from gmall_flink_spark.sources.tables import table
+from gmall_flink_spark.sources.tables import session_stage, spread, table
 
 
 def keyword_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -235,48 +235,35 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOW_K = 8
 WINNOW_W = 4
 
-#: per-doc winnow fingerprints, memoized per (SparkContext, sf_dir,
-#: content stamp): text_winnow_fingerprint and winnow_match_pairs consume
-#: the SAME gram stream (the two heaviest bench entries, ~11.7s combined
-#: at sf0.1 when each re-hashed the corpus — r04 "What's wrong" #3); at
-#: production scale this is the persisted fingerprint table both queries
-#: read. Keys come from sources.tables.memo_key: the applicationId part
-#: makes a stopped/recreated session (whose localCheckpoint blocks died
-#: with its context) rebuild instead of serving a dead DF, the content
-#: stamp makes an in-session rewrite of documents.parquet rebuild instead
-#: of serving stale data.
-_WINNOW_DOCS: dict[tuple, DataFrame] = {}
-
-
+#: per-doc winnow fingerprints, a session stage: text_winnow_fingerprint
+#: and winnow_match_pairs consume the SAME gram stream (the two heaviest
+#: bench entries, ~11.7s combined at sf0.1 when each re-hashed the corpus
+#: — r04 "What's wrong" #3); at production scale this is the persisted
+#: fingerprint table both queries read.
+@session_stage("documents")
 def _winnow_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, doc_id, m, fp_ct, fps): gram count, fingerprint count, and
     the winnowed fingerprint array per document — hashed once, eagerly
     localCheckpointed, shared by both winnow queries."""
     from gmall_flink_spark.functions.text import char_gram_hashes, winnow
-    from gmall_flink_spark.sources.tables import memo_key
 
-    key = memo_key(spark, sf_dir, "documents", _WINNOW_DOCS)
-    if key not in _WINNOW_DOCS:
-        n_grams = F.greatest(F.length("text") - WINNOW_K + 1, F.lit(0))
-        # grams MUST land as a named column before winnow references it 5×
-        # (CollapseProject only refuses to inline multiply-referenced
-        # aliases) — otherwise the md5 gram stream re-evaluates per
-        # reference (measured 20-25s vs 5s for this stage at sf0.1).
-        from gmall_flink_spark.sources.tables import spread
-
-        docs = (
-            spread(table(spark, sf_dir, "documents"), "doc_id")
-            .select(
-                "source",
-                "doc_id",
-                n_grams.alias("m"),
-                char_gram_hashes("text", WINNOW_K).alias("grams"),
-            )
-            .withColumn("fps", winnow(F.col("grams"), WINNOW_W, F.col("m")))
-            .select("source", "doc_id", "m", F.size("fps").alias("fp_ct"), "fps")
+    n_grams = F.greatest(F.length("text") - WINNOW_K + 1, F.lit(0))
+    # grams MUST land as a named column before winnow references it 5×
+    # (CollapseProject only refuses to inline multiply-referenced
+    # aliases) — otherwise the md5 gram stream re-evaluates per
+    # reference (measured 20-25s vs 5s for this stage at sf0.1).
+    docs = (
+        spread(table(spark, sf_dir, "documents"), "doc_id")
+        .select(
+            "source",
+            "doc_id",
+            n_grams.alias("m"),
+            char_gram_hashes("text", WINNOW_K).alias("grams"),
         )
-        _WINNOW_DOCS[key] = docs.localCheckpoint(eager=True)
-    return _WINNOW_DOCS[key]
+        .withColumn("fps", winnow(F.col("grams"), WINNOW_W, F.col("m")))
+        .select("source", "doc_id", "m", F.size("fps").alias("fp_ct"), "fps")
+    )
+    return docs.localCheckpoint(eager=True)
 
 
 def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,10 @@ must stream, and AQE handles partition sizing.
 
 from __future__ import annotations
 
+import functools
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -29,27 +33,87 @@ TABLES = (
 )
 
 
-#: session memo of the RAW ``spark.read.parquet`` DataFrames (optimization
-#: r15, the per-query session floor): every ``spark.read.parquet`` call is
-#: a driver-side file-listing + schema-inference round trip (~120-180 ms
-#: measured), and a suite run issues hundreds of them for the same ten
-#: immutable paths. The memo holds an UNEXECUTED plan object — never data;
-#: scans still stream and re-list files at execution — keyed on the same
-#: (appId, path, content stamp) rule as every other memo (memo_key), so an
-#: in-session rewrite is picked up and a fresh session never sees a dead
-#: frame. The timestamp normalization below stays per-call: it reads the
-#: live session timezone, which must keep failing loudly if a caller
-#: un-pins UTC mid-session. Registered in clear_session_memos.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
+#: every session_stage, in definition order (clear_session_memos walks it)
+_STAGES: list = []
+
+
+def session_stage(table_name: str | None):
+    """Memoize a shared stage builder ``fn(spark, sf_dir, *args)`` for the
+    live session. Every shared stage (tokenized docs, LSH candidates,
+    trained tokenizer state, the raw table reader, ...) is one of these,
+    registered for clear_session_memos.
+
+    Key: (applicationId, sf_dir, table, content stamp), the stamp being
+    the table parquet's (mtime_ns, size). ``table_name`` names the table
+    the stage derives from; ``None`` means the stage's first extra
+    argument is the table name (the raw reader). Other extra arguments
+    are not part of the key. Each lookup evicts entries of a foreign
+    session (a stopped context's checkpoint blocks died with it) and
+    same-(sf_dir, table) entries whose stamp moved (an in-session
+    rewrite), so a stage never serves a dead or stale frame nor pins
+    superseded blocks.
+
+    The build runs under the stage's own lock and is stored only if it
+    returns: concurrent cold callers build once, a failed build publishes
+    nothing. Stages call each other only down the stage DAG, so per-stage
+    locks cannot deadlock. Persistence (eager/lazy ``localCheckpoint``,
+    per-round checkpoints, or none) is the builder's own. The wrapper
+    exposes ``.clear()`` and its ``.memo``."""
+
+    def wrap(build):
+        memo: dict = {}
+        lock = threading.Lock()
+
+        @functools.wraps(build)
+        def stage(spark: SparkSession, sf_dir: str, *args):
+            name = table_name or args[0]
+            app_id = spark.sparkContext.applicationId
+            try:
+                st = os.stat(f"{sf_dir.rstrip('/')}/{name}.parquet")
+                stamp = (st.st_mtime_ns, st.st_size)
+            except OSError:
+                stamp = (0, 0)
+            key = (app_id, sf_dir, name, stamp)
+            with lock:
+                for k in [
+                    k
+                    for k in memo
+                    if k[0] != app_id or (k[1:3] == key[1:3] and k[3] != stamp)
+                ]:
+                    del memo[k]
+                if key not in memo:
+                    memo[key] = build(spark, sf_dir, *args)
+                return memo[key]
+
+        def clear() -> None:
+            with lock:
+                memo.clear()
+
+        stage.clear = clear
+        stage.memo = memo
+        _STAGES.append(stage)
+        return stage
+
+    return wrap
+
+
+@session_stage(None)
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The RAW ``spark.read.parquet`` frame. Each read is a driver-side
+    file-listing + schema-inference round trip (~120-180 ms measured) and
+    a suite run issues hundreds for the same ten immutable paths; the
+    stage holds the UNEXECUTED plan object, never data — scans still
+    stream and re-list files at execution."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    key = memo_key(spark, sf_dir, name, _TABLE_MEMO)
-    if key not in _TABLE_MEMO:
-        _TABLE_MEMO[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    df = _TABLE_MEMO[key]
+    # the timestamp normalization below stays per-call, outside the stage:
+    # it reads the live session timezone, which must keep failing loudly
+    # if a caller un-pins UTC mid-session
+    df = _read_table(spark, sf_dir, name)
     if name == "events":
         # Older testdata stored ts as parquet TIMESTAMP(NANOS), read as long
         # nanos (spark.sql.legacy.parquet.nanosAsLong); truncate to micros —
@@ -96,35 +160,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def memo_key(spark: SparkSession, sf_dir: str, name: str, memo: dict) -> tuple:
-    """Key for session-scoped DataFrame/value memos, safe against the two
-    staleness hazards of a bare (appId, sf_dir) key: the table's parquet
-    being REWRITTEN in-session under the same path (content stamp:
-    mtime_ns + size, one os.stat), and dead-session entries accumulating
-    forever (entries keyed by a different applicationId are evicted here,
-    so the memo only ever holds the live context's data)."""
-    import os as _os
-
-    app_id = spark.sparkContext.applicationId
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    try:
-        st = _os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = (0, 0)
-    # evict foreign-session entries AND same-session entries for this
-    # (sf_dir, name) whose stamp no longer matches — otherwise an
-    # in-session rewrite leaves the superseded entry (and its pinned
-    # localCheckpoint blocks) referenced for the session's lifetime
-    for k in [
-        k
-        for k in memo
-        if k[0] != app_id or (k[1:3] == (sf_dir, name) and k[3] != stamp)
-    ]:
-        del memo[k]
-    return (app_id, sf_dir, name, stamp)
-
-
 def spread(df: DataFrame, *cols: str) -> DataFrame:
     """Rebalance a narrow scan before heavy per-row compute.
 
@@ -157,19 +192,54 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
+def warm_concurrently(*builds) -> list:
+    """Run independent zero-argument stage builds on driver threads and
+    return their results in order. Chains of small driver-synced jobs
+    (trainer rounds, banding steps) leave executors idle between jobs;
+    overlapping DIFFERENT chains lets Spark's FIFO scheduler back-fill one
+    chain's gaps with another's tasks. Each build runs through
+    ``inheritable_thread_target``, so the caller's local properties (job
+    group, scheduler pool) reach its thread. Every build runs to its end;
+    then the first failed build's error (in argument order) is re-raised."""
+    from pyspark import inheritable_thread_target
+
+    results: list = [None] * len(builds)
+    errors: list = [None] * len(builds)
+
+    def run(i: int, build) -> None:
+        try:
+            results[i] = build()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors[i] = e
+
+    threads = [
+        threading.Thread(target=inheritable_thread_target(functools.partial(run, i, b)))
+        for i, b in enumerate(builds)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
+
+
 def clear_session_memos(
     disk_artifacts: bool = True, sf_dir: str | None = None
 ) -> None:
-    """Reset every session-memoized shared stage (winnow fingerprints,
-    tokenized docs, LSH candidates, near-dup components, IVF assignment,
-    PQ codebooks, ...). Callers that must observe or time a COLD pipeline
-    (scripts/scaling_probe.py, scripts/explain_audit.py) use this so a
-    warm memo can't turn a measured run into a cache read. Single source
-    of truth: adding a new memo means adding it here, and only here.
+    """Reset every session_stage (winnow fingerprints, tokenized docs,
+    LSH candidates, near-dup components, IVF assignment, PQ codebooks,
+    the raw table reader, ...). Callers that must observe or time a COLD
+    pipeline (bench.py, perfbench, scripts/explain_audit.py, the probes)
+    use this so a warm stage can't turn a measured run into a cache read.
+    Every stage registers itself when its module is imported; a stage
+    whose module was never imported holds nothing to clear.
 
     ``disk_artifacts=False`` keeps the write-once CROSS-SESSION artifacts
     (the persisted component mapping) while still dropping the in-memory
-    memos — the mode for measuring a CONSUMER's cost under the production
+    stages — the mode for measuring a CONSUMER's cost under the production
     posture, where the artifact exists by construction; the default wipes
     them too, attributing the full build to whoever runs next.
 
@@ -178,73 +248,18 @@ def clear_session_memos(
     unscoped wipe deletes every SF's artifact, and a concurrent reader of
     another SF's mapping then dies mid-scan with FILE_NOT_EXIST (this
     raced the r13 sweep against the explain audit)."""
-    from gmall_flink_spark.queries.llm_dedup import (
-        _COMPONENTS,
-        _DOC_STATS,
-        _DOC_TOKS,
-        _DOC_UNITS,
-        _EXACT_PAIRS,
-        _LSH_CANDS,
-        _MINHASH_MX,
-        _SAMPLE_COMPONENTS,
-        _SAMPLE_EXACT,
-        _SUBSTR_IDX,
-        _VERIFIED,
-    )
-    from gmall_flink_spark.queries.datasel import (
-        _BPE_SAMPLED,
-        _BPE_STATE,
-        _UNIGRAM_VOCAB,
-        _WORD_OCC,
-        _WP_STATE,
-    )
-    from gmall_flink_spark.queries.classify import _NB_SCORED_MEMO
-    from gmall_flink_spark.queries.llm_pipeline import _CLEAN_RANKED, _PACK_TOTALS
-    from gmall_flink_spark.queries.similarity import (
-        _ASSIGNED_MEMO,
-        _NEARDUP_PAIRS,
-        _PQ_BOOKS_MEMO,
-    )
-    from gmall_flink_spark.queries.text import _WINNOW_DOCS
-
-    for memo in (
-        _BPE_SAMPLED,
-        _BPE_STATE,
-        _CLEAN_RANKED,
-        _UNIGRAM_VOCAB,
-        _WORD_OCC,
-        _WP_STATE,
-        _WINNOW_DOCS,
-        _COMPONENTS,
-        _DOC_STATS,
-        _DOC_TOKS,
-        _DOC_UNITS,
-        _EXACT_PAIRS,
-        _LSH_CANDS,
-        _MINHASH_MX,
-        _SAMPLE_COMPONENTS,
-        _SAMPLE_EXACT,
-        _SUBSTR_IDX,
-        _ASSIGNED_MEMO,
-        _NB_SCORED_MEMO,
-        _NEARDUP_PAIRS,
-        _PACK_TOTALS,
-        _PQ_BOOKS_MEMO,
-        _TABLE_MEMO,
-        _VERIFIED,
-    ):
-        memo.clear()
+    for stage in _STAGES:
+        stage.clear()
     if not disk_artifacts:
         return
     # the component mapping also persists as a cross-session disk artifact
     # (queries/llm_dedup._components); a cold-cost measurement must wipe it
     # too or the "cold" run is a parquet read of the artifact
     import glob
-    import os as _os
     import shutil
 
     from gmall_flink_spark.sources.materialize import CACHE_ROOT, cache_key
 
     key = cache_key(sf_dir) if sf_dir else "*"
-    for p in glob.glob(_os.path.join(CACHE_ROOT, key, "neardup_components-*")):
+    for p in glob.glob(os.path.join(CACHE_ROOT, key, "neardup_components-*")):
         shutil.rmtree(p, ignore_errors=True)

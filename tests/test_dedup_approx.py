@@ -130,7 +130,6 @@ def test_components_artifact_persists_and_invalidates(spark, tmp_path):
     import time
 
     from gmall_flink_spark.queries.llm_dedup import (
-        _COMPONENTS,
         _components,
         _components_artifact_path,
     )
@@ -148,7 +147,7 @@ def test_components_artifact_persists_and_invalidates(spark, tmp_path):
     assert os.path.exists(p1) and first, (p1, first)
     build_mark = os.path.getmtime(p1)
 
-    _COMPONENTS.clear()  # drop the L1 memo; the artifact must serve the read
+    _components.clear()  # drop the L1 stage; the artifact must serve the read
     again = sorted(map(tuple, _components(spark, sf).collect()))
     assert again == first
     assert os.path.getmtime(p1) == build_mark  # read, not rebuilt
@@ -169,8 +168,16 @@ def test_components_stamp_covers_every_producer_layer(tmp_path, monkeypatch):
     layer the mapping derives from changes — the verify threshold
     (hoisted into VERIFY_J_NUM/DEN constants), a producer function's
     source (_verified_pairs et al.), and the tokenize rule — so six
-    consumer queries can never read a stale cross-session mapping."""
+    consumer queries can never read a stale cross-session mapping. The
+    producers are session_stage wrappers: the stamp must hash each
+    builder's OWN body, not the wrapper's (which is identical for all
+    seven, so an edited producer would keep its stamp)."""
+    import inspect
+
     from gmall_flink_spark.queries import llm_dedup as qd
+
+    hashed = inspect.getsource(qd._verified_pairs)
+    assert "def _verified_pairs(" in hashed and "VERIFY_J_DEN" in hashed
 
     sf = str(tmp_path)  # no parquet needed: the stamp falls back to "0:0"
     base = qd._components_stamp(sf)

@@ -189,39 +189,53 @@ def test_data_stamp_memoized_no_rehash_on_hit(spark, tmp_path, monkeypatch):
 
 def test_clear_session_memos_covers_every_memo():
     """clear_session_memos is the ONE wipe the probes, the explain audit,
-    and every cold-cost measurement rely on; a memo dict that exists but
-    is not registered silently serves warm state to a measurement that
-    believes it cleared everything (r14 finding: _WP_STATE was defined in
-    r12 and never registered, so the explain audit's WordPiece rows read
-    the tokenizer-compare run's warm trainer). Discover every module-level
-    session-memo dict by its declaration pattern, poison each with a
-    sentinel, wipe, and require all empty — a NEW memo that skips
-    registration fails here the round it lands."""
+    and every cold-cost measurement rely on; a stage it misses silently
+    serves warm state to a measurement that believes it cleared
+    everything (r14 finding: a hand-rolled _WP_STATE dict was never
+    registered, so the explain audit's WordPiece rows read the
+    tokenizer-compare run's warm trainer). Every shared stage is a
+    sources.tables.session_stage, which registers itself: import the
+    whole package, poison every registered stage, wipe, and require all
+    empty. The stage count is pinned, so adding or removing a stage is a
+    deliberate edit here."""
     import importlib
+    import pkgutil
+
+    import gmall_flink_spark
+    from gmall_flink_spark.sources import tables
+
+    for mod in pkgutil.walk_packages(gmall_flink_spark.__path__, "gmall_flink_spark."):
+        importlib.import_module(mod.name)
+    stages = list(tables._STAGES)
+    names = [f"{s.__module__}.{s.__name__}" for s in stages]
+    assert len(stages) == 24, names
+    sentinel = ("__clear_session_memos_coverage_test__",)
+    for stage in stages:
+        stage.memo[sentinel] = None
+    tables.clear_session_memos(disk_artifacts=False)
+    missed = [n for n, s in zip(names, stages) if s.memo]
+    assert not missed, f"stages NOT cleared by clear_session_memos: {missed}"
+
+
+def test_no_hand_rolled_session_memos():
+    """Static guard behind the registry test: a module-level
+    ``dict[tuple, ...]`` memo or a hand-computed stage key outside
+    sources.tables.session_stage would bypass the registry (and the
+    per-stage build lock), so it fails here the round it lands."""
     import pathlib
     import re
 
     import gmall_flink_spark
 
-    from gmall_flink_spark.sources.tables import clear_session_memos
-
     pkg_root = pathlib.Path(gmall_flink_spark.__file__).parent
-    found = []
-    for path in pkg_root.rglob("*.py"):
+    offenders = []
+    for path in sorted(pkg_root.rglob("*.py")):
         text = path.read_text()
-        mod = "gmall_flink_spark." + ".".join(
-            path.relative_to(pkg_root).with_suffix("").parts
-        )
-        for m in re.finditer(r"^(_[A-Z_0-9]+): dict\[tuple", text, re.M):
-            found.append((mod, m.group(1)))
-    assert len(found) >= 19, f"memo discovery broke: {found}"
-    sentinel = ("__clear_session_memos_coverage_test__",)
-    for modname, name in found:
-        getattr(importlib.import_module(modname), name)[sentinel] = None
-    clear_session_memos(disk_artifacts=False)
-    missed = [
-        f"{modname}.{name}"
-        for modname, name in found
-        if sentinel in getattr(importlib.import_module(modname), name)
-    ]
-    assert not missed, f"memos NOT cleared by clear_session_memos: {missed}"
+        rel = path.relative_to(pkg_root)
+        for m in re.finditer(r"^\w+\s*:\s*dict\[tuple", text, re.M):
+            offenders.append(f"{rel}: {m.group(0)}")
+        for m in re.finditer(r"\bmemo_key\s*\(|import[^\n]*\bmemo_key\b", text):
+            offenders.append(f"{rel}: {m.group(0)}")
+        if str(rel) != "sources/tables.py" and "applicationId" in text:
+            offenders.append(f"{rel}: keys on applicationId outside session_stage")
+    assert not offenders, offenders

@@ -1163,7 +1163,7 @@ def test_unigram_unk_contract_long_words(spark, tmp_path):
 
     from gmall_flink_spark.queries.datasel import (
         ORACLE,
-        _UNIGRAM_VOCAB,
+        _unigram_vocab,
         llm_unigram_encode,
         llm_unigram_roundtrip,
     )
@@ -1178,7 +1178,7 @@ def test_unigram_unk_contract_long_words(spark, tmp_path):
     )
     sf = str(tmp_path)
     docs.coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    _UNIGRAM_VOCAB.clear()
+    _unigram_vocab.clear()
     try:
         enc = {r["source"]: r for r in llm_unigram_encode(spark, sf).collect()}
         assert enc["s1"]["unk_ct"] == 1 and enc["s2"]["unk_ct"] == 1
@@ -1200,7 +1200,7 @@ def test_unigram_unk_contract_long_words(spark, tmp_path):
             got = [tuple(r) for r in fn(spark, sf).collect()]
             assert got == con.sql(ORACLE[q]).fetchall(), q
     finally:
-        _UNIGRAM_VOCAB.clear()  # tmp_path vocab must not leak to gate tests
+        _unigram_vocab.clear()  # tmp_path vocab must not leak to gate tests
 
 
 @pytest.mark.slow
@@ -1584,7 +1584,7 @@ def test_wordpiece_unk_contract_long_and_dropped(spark, tmp_path):
 
     from gmall_flink_spark.queries.datasel import (
         ORACLE,
-        _WP_STATE,
+        _wp_state,
         llm_wordpiece_encode,
         llm_wordpiece_train,
     )
@@ -1600,7 +1600,7 @@ def test_wordpiece_unk_contract_long_and_dropped(spark, tmp_path):
     )
     sf = str(tmp_path)
     docs.coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    _WP_STATE.clear()  # isolate the memo from other tests' sf dirs
+    _wp_state.clear()  # isolate the stage from other tests' sf dirs
     try:
         enc = {r["source"]: r for r in llm_wordpiece_encode(spark, sf).collect()}
         # both UNK kinds are live and counted, never dropped from word_ct
@@ -1620,7 +1620,7 @@ def test_wordpiece_unk_contract_long_and_dropped(spark, tmp_path):
         assert got_tr == con.sql(ORACLE["llm_wordpiece_train"]).fetchall()
         assert got_tr, "degenerate corpus learned no merges"
     finally:
-        _WP_STATE.clear()  # tmp_path state must not leak to gate-SF tests
+        _wp_state.clear()  # tmp_path state must not leak to gate-SF tests
 
 
 def test_limited_alphabet_warns_when_inert(spark):
