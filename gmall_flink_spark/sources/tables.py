@@ -226,31 +226,26 @@ def warm_concurrently(*builds) -> list:
     return results
 
 
-def clear_session_memos(
-    disk_artifacts: bool = True, sf_dir: str | None = None
-) -> None:
+def clear_session_memos(sf_dir: str | None = None) -> None:
     """Reset every session_stage (winnow fingerprints, tokenized docs,
     LSH candidates, near-dup components, IVF assignment, PQ codebooks,
     the raw table reader, ...). Callers that must observe or time a COLD
-    pipeline (bench.py, perfbench, scripts/explain_audit.py, the probes)
-    use this so a warm stage can't turn a measured run into a cache read.
-    Every stage registers itself when its module is imported; a stage
-    whose module was never imported holds nothing to clear.
+    pipeline (bench.py, perfbench, scripts/explain_audit.py) use this so a
+    warm stage can't turn a measured run into a cache read. Every stage
+    registers itself when its module is imported; a stage whose module was
+    never imported holds nothing to clear.
 
-    ``disk_artifacts=False`` keeps the write-once CROSS-SESSION artifacts
-    (the persisted component mapping) while still dropping the in-memory
-    stages — the mode for measuring a CONSUMER's cost under the production
-    posture, where the artifact exists by construction; the default wipes
-    them too, attributing the full build to whoever runs next.
-
-    ``sf_dir`` scopes the disk wipe to ONE corpus's artifacts. Pass it
-    from any probe/audit that runs alongside other jobs on the host: the
-    unscoped wipe deletes every SF's artifact, and a concurrent reader of
-    another SF's mapping then dies mid-scan with FILE_NOT_EXIST (this
-    raced the r13 sweep against the explain audit)."""
+    ``sf_dir`` also wipes that one corpus's write-once CROSS-SESSION
+    artifacts (the persisted component mapping), attributing the full
+    build to whoever runs next. Without it they are kept: the posture for
+    measuring a CONSUMER's cost, where the artifact exists by
+    construction. No call wipes another corpus's artifacts, so a
+    concurrent reader of another SF's mapping cannot die mid-scan with
+    FILE_NOT_EXIST (an all-corpora wipe raced the r13 sweep against the
+    explain audit)."""
     for stage in _STAGES:
         stage.clear()
-    if not disk_artifacts:
+    if sf_dir is None:
         return
     # the component mapping also persists as a cross-session disk artifact
     # (queries/llm_dedup._components); a cold-cost measurement must wipe it
@@ -260,6 +255,6 @@ def clear_session_memos(
 
     from gmall_flink_spark.sources.materialize import CACHE_ROOT, cache_key
 
-    key = cache_key(sf_dir) if sf_dir else "*"
+    key = cache_key(sf_dir)
     for p in glob.glob(os.path.join(CACHE_ROOT, key, "neardup_components-*")):
         shutil.rmtree(p, ignore_errors=True)

@@ -22,7 +22,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -54,55 +53,34 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
-    # one warm-up + the bench's untimed synth-topic materialization
-    queries["q1_pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from gmall_flink_spark.sources.cdc_synth import (
-        activity_envelope,
-        cart_dead_letters,
-        cart_envelope,
-        coupon_envelope,
-        detail_envelope,
-        orders_dead_letters,
-        orders_envelope,
-    )
-    from gmall_flink_spark.sources.log_synth import page_log_parsed
-
-    for build in (orders_envelope, cart_envelope, detail_envelope,
-                  activity_envelope, coupon_envelope, page_log_parsed,
-                  orders_dead_letters, cart_dead_letters):
-        build(spark, args.sf)
-
-    calib = bench.calibrate(spark)
+    # the bench prelude, minus its disk wipe: each cold run below wipes
+    # (or, with --keep-artifacts, keeps) this SF's artifacts itself
+    calib = bench.prepare(spark)
+    bench.materialize_topics(spark, args.sf)
     out: dict[str, dict] = {"_calib": calib, "_sf": args.sf}
-
-    def timed(name: str) -> float:
-        t0 = time.perf_counter()
-        with bench.track_terminal_sort():
-            df = bench.unsorted_form(queries[name](spark, args.sf))
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3), df
 
     for name in args.names:
         if name not in queries:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
-        clear_session_memos(
-            disk_artifacts=not args.keep_artifacts, sf_dir=args.sf
-        )
+        clear_session_memos(sf_dir=None if args.keep_artifacts else args.sf)
+        built = []
+
+        def cold_fn(spark, sf_dir):
+            built.append(queries[name](spark, sf_dir))
+            return built[0]
+
         spark.sparkContext.setJobDescription(f"qprof cold: {name}")
-        cold, df = timed(name)
+        cold = bench.time_query(spark, cold_fn, args.sf)
         warms = []
         for i in range(args.warm):
             spark.sparkContext.setJobDescription(f"qprof warm{i}: {name}")
-            w, _ = timed(name)
-            warms.append(w)
+            warms.append(bench.time_query(spark, queries[name], args.sf))
         out[name] = {"cold": cold, "warm": warms}
         print(f"{name}: cold {cold}s warm {warms}", flush=True)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            plan = bench.explain_str(df, "formatted")
+            plan = bench.explain_str(bench.unsorted_form(built[0]), "formatted")
             with open(
                 os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w"
             ) as fh:

@@ -8,8 +8,8 @@ is the changelog replay tail a restore must pay: a restore loads the
 newest uploaded snapshot per state-store partition and replays every
 .changelog version after it. Fewer snapshot uploads (longer interval) =
 a longer replay tail. This drill measures that directly on the deepest
-pipeline at the 100x construction (same inputs as
-changelog_knobs_probe.build_deepest_inputs):
+pipeline at the 100x construction (``build_deepest_inputs``, the inputs
+the r14 changelog-knob probe ran on):
 
 per maintenance interval (60s default / 600s ≈ never within the run):
   1. run the pipeline under changelog checkpointing for ~interrupt_s
@@ -101,6 +101,63 @@ def replay_tail(state_dir: str) -> dict:
     }
 
 
+def build_deepest_inputs(spark, base: str, k: int, tmp: str) -> dict:
+    """Kx id-distinct envelope slice dirs for the deepest pipeline — the
+    construction the r13 100x state-size probe and the r14 changelog-knob
+    probe measured on (both retired; CHANGELOG_KNOBS_r14.json holds the
+    uninterrupted answer hash). Returns {name: (slices_dir, schema)}."""
+    from pyspark.sql import functions as F
+
+    from sf1_replica import build_distinct_facts, build_scaled_dir
+
+    from gmall_flink_spark.sources.cdc_synth import (
+        activity_envelope,
+        coupon_envelope,
+        detail_envelope,
+        orders_envelope,
+    )
+    from gmall_flink_spark.streaming.core import split_into_files
+    from gmall_flink_spark.streaming.pipelines import sentinel_envelope_slices
+
+    scaled = build_scaled_dir(base, k)
+    build_distinct_facts(spark, scaled, base, k)
+    specs = {
+        "od": (detail_envelope(spark, scaled), "order_detail",
+               {"id": "-1", "order_id": "-9", "sku_id": "-1",
+                "sku_num": "1", "split_total_amount": "0"}),
+        "oi": (orders_envelope(spark, scaled), "order_info",
+               {"id": "-9", "user_id": "-9"}),
+        "oa": (activity_envelope(spark, scaled), "order_detail_activity",
+               {"order_detail_id": "-1", "activity_id": "-3"}),
+        "oc": (coupon_envelope(spark, scaled), "order_detail_coupon",
+               {"order_detail_id": "-1", "coupon_id": "-4"}),
+    }
+    pipe_inputs = {}
+    for name, (env, tbl, data) in specs.items():
+        slices = os.path.join(tmp, f"ouw_{name}")
+        split_into_files(env, 4, "ts", slices)
+        far = int(env.agg(F.max("ts")).collect()[0][0]) + 2_160_000_000
+        sentinel_envelope_slices(spark, slices, tbl, data, far, n=4)
+        pipe_inputs[name] = (slices, env.schema)
+    return pipe_inputs
+
+
+def deepest_stream(spark, pipe_inputs: dict):
+    """The deepest pipeline (3 stream-stream joins + windowed distinct)
+    over the slice dirs from build_deepest_inputs."""
+    from gmall_flink_spark.streaming.pipelines import order_uu_window_stream
+
+    streams = {
+        name: spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(slices)
+        for name, (slices, schema) in pipe_inputs.items()
+    }
+    return order_uu_window_stream(
+        streams["od"], streams["oi"], streams["oa"], streams["oc"]
+    )
+
+
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     base = (
@@ -118,8 +175,6 @@ def main() -> None:
         )
 
     from pyspark.sql import functions as F
-
-    from changelog_knobs_probe import build_deepest_inputs, deepest_stream
 
     from gmall_flink_spark.session import STATE_STORE_PROVIDERS, get_spark
 

@@ -5,7 +5,7 @@ rows, 1M orders, 1M events, 600k docs) in ONE session, and write the
 per-query ratio table to BENCH_LOCAL_sf1.json.
 
 No sf1 testdata exists in this environment, so the decade comes from the
-scaling-probe construction (dims stay 1x — at scale dims grow far slower
+sf1_replica construction (dims stay 1x — at scale dims grow far slower
 than facts): documents materialize as 10 ID-DISTINCT token-salted
 replicas (symlink replication is dedup-adversarial), and orders /
 lineitem / events materialize as 10 ID-DISTINCT key-shifted replicas
@@ -29,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -40,7 +39,7 @@ def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from scaling_probe import (
+    from sf1_replica import (
         build_distinct_documents,
         build_distinct_facts,
         build_scaled_dir,
@@ -61,46 +60,18 @@ def main() -> None:
 
     queries = all_queries()
     subset = B.HEADLINE[: B.R1_HEADLINE_N]
-
-    # materialize the synthesized topics at BOTH scales before the clock
-    # starts (the bench.py pre-build discipline) — otherwise the first CDC
-    # query at each scale pays the one-time topic synthesis and reads as a
-    # fake super-linear outlier (first run: cdc_cart_add x32.5, all build)
-    from gmall_flink_spark.sources.cdc_synth import (
-        activity_envelope,
-        cart_dead_letters,
-        cart_envelope,
-        coupon_envelope,
-        detail_envelope,
-        orders_dead_letters,
-        orders_envelope,
-    )
-    from gmall_flink_spark.sources.log_synth import page_log_parsed
-
-    for sf_dir in (base, scaled):
-        for build in (page_log_parsed, orders_envelope, cart_envelope,
-                      detail_envelope, activity_envelope, coupon_envelope,
-                      orders_dead_letters, cart_dead_letters):
-            build(spark, sf_dir)
-
-    calib = B.calibrate(spark)
-
-    def run_one(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        with B.track_terminal_sort():
-            df = B.unsorted_form(queries[name](spark, sf_dir))
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+    # synthesized topics at BOTH scales before the clock starts
+    calib = B.prepare(spark, base, scaled)
 
     rows = {}
     errors = {}
     for name in subset:
         try:
-            run_one(name, base)  # warm-up: codegen out of the clock
-            clear_session_memos()
-            t1 = run_one(name, base)
-            clear_session_memos()
-            tk = run_one(name, scaled)
+            B.time_query(spark, queries[name], base)  # warm-up: codegen out of the clock
+            clear_session_memos(sf_dir=base)
+            t1 = B.time_query(spark, queries[name], base)
+            clear_session_memos(sf_dir=scaled)
+            tk = B.time_query(spark, queries[name], scaled)
             rows[name] = {
                 "sf01_sec": t1,
                 "sf1_sec": tk,

@@ -76,8 +76,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from bench import materialize_topics
     from oracle_harness import _norm_pdf
-    from scaling_probe import (
+    from sf1_replica import (
         build_distinct_documents,
         build_distinct_facts,
         build_scaled_dir,
@@ -102,22 +103,7 @@ def main() -> None:
         os.unlink(os.path.join(emb, n))
 
     # one-time synthesized-topic builds OUTSIDE the per-query timing
-    # (the sf1_checkpoint lesson: an un-prebuilt first CDC query reads x32)
-    from gmall_flink_spark.sources.cdc_synth import (
-        activity_envelope,
-        cart_dead_letters,
-        cart_envelope,
-        coupon_envelope,
-        detail_envelope,
-        orders_dead_letters,
-        orders_envelope,
-    )
-    from gmall_flink_spark.sources.log_synth import page_log_parsed
-
-    for build in (page_log_parsed, orders_envelope, cart_envelope,
-                  detail_envelope, activity_envelope, coupon_envelope,
-                  orders_dead_letters, cart_dead_letters):
-        build(spark, scaled)
+    materialize_topics(spark, scaled)
 
     def run_oracle_scaled(sql: str):
         con = duckdb.connect()

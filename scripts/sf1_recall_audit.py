@@ -67,7 +67,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
     from oracle_harness import _norm_pdf
-    from scaling_probe import build_distinct_documents, build_scaled_dir
+    from sf1_replica import build_distinct_documents, build_scaled_dir
 
     spark = (
         SparkSession.builder.master("local[16]")

@@ -11,9 +11,10 @@ scaling is observable. Run it once per core count; each run writes
 SCALING_SF1_c<cpus>.json, and when both files exist the second run also
 writes the combined ratio table SCALING_SF1_r15.json.
 
-Methodology mirrors bench.py: noop sink, terminal-sort strip, synth topics
-materialized untimed, session memos + disk artifacts wiped once before the
-timed region (family sharing inside the run mirrors the bench's order).
+Methodology is bench.py's (``bench.prepare`` + ``bench.time_query``):
+noop sink, terminal-sort strip, synth topics materialized untimed, session
+memos + disk artifacts wiped once before the timed region (family sharing
+inside the run mirrors the bench's order).
 
 Usage:  SPARK_GRAFT_CPUS=32 python scripts/sf1_scaling.py [K]
         SPARK_GRAFT_CPUS=8  python scripts/sf1_scaling.py [K]
@@ -24,7 +25,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -52,7 +52,7 @@ def main() -> None:
     base = "/root/testdata/sf0.1"
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from scaling_probe import (
+    from sf1_replica import (
         build_distinct_documents,
         build_distinct_facts,
         build_scaled_dir,
@@ -61,7 +61,6 @@ def main() -> None:
     import bench as B
     from gmall_flink_spark.registry import all_queries
     from gmall_flink_spark.session import get_spark
-    from gmall_flink_spark.sources.tables import clear_session_memos
 
     spark = get_spark(app_name=f"sf1-scaling-c{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -79,36 +78,11 @@ def main() -> None:
             fh.write("built")
 
     queries = all_queries()
-    from gmall_flink_spark.sources.cdc_synth import (
-        activity_envelope,
-        cart_dead_letters,
-        cart_envelope,
-        coupon_envelope,
-        detail_envelope,
-        orders_dead_letters,
-        orders_envelope,
-    )
-    from gmall_flink_spark.sources.log_synth import page_log_parsed
-
-    for build in (page_log_parsed, orders_envelope, cart_envelope,
-                  detail_envelope, activity_envelope, coupon_envelope,
-                  orders_dead_letters, cart_dead_letters):
-        build(spark, scaled)
-
-    calib = B.calibrate(spark)
-    # one session warm-up, then a clean cold region (bench discipline)
-    queries["q1_pricing_summary"](spark, base).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    clear_session_memos(sf_dir=scaled)
+    calib = B.prepare(spark, scaled)
 
     rows: dict[str, float] = {}
     for name in PROBE_QUERIES:
-        t0 = time.perf_counter()
-        with B.track_terminal_sort():
-            df = B.unsorted_form(queries[name](spark, scaled))
-        df.write.format("noop").mode("overwrite").save()
-        rows[name] = round(time.perf_counter() - t0, 3)
+        rows[name] = B.time_query(spark, queries[name], scaled)
         print(f"c{cpus} {name}: {rows[name]:.2f}s", flush=True)
 
     out = {

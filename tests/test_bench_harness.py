@@ -115,3 +115,39 @@ def test_headline_names_resolve_in_registry():
     assert not missing, f"HEADLINE entries not in registry: {missing}"
     assert len(set(HEADLINE)) == len(HEADLINE), "duplicate HEADLINE entries"
     assert R1_HEADLINE_N <= len(HEADLINE)
+
+
+def test_compact_line_fits_the_stdout_budget():
+    """Only the tail of the bench's stdout is kept and parsed, so the one
+    JSON line must fit 1900 chars even when every query is slow (round
+    2's line was cut and its result lost). Kept timings are a HEADLINE
+    prefix, and the truncation is flagged."""
+    import json
+
+    from bench import HEADLINE, R1_HEADLINE_N, compact_line
+
+    timings = {name: 999.99 for name in HEADLINE}
+    detail = {
+        "metric": "headline query suite wall time",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "query_ct": len(timings),
+        "r01_comparable_sec": round(999.99 * R1_HEADLINE_N, 3),
+        "failed_ct": 0,
+        "errors": {},
+        "calib_sec": {"jvm": 999.999, "py": 999.999},
+        "r01_comparable_warm_sec": 99999.999,
+        "r01_comparable_warm_runs": [99999.999] * 3,
+        "r01_comparable_warm_min_sec": 99999.999,
+        "r01_comparable_warm_median_sec": 99999.999,
+        "queries": timings,
+        "streaming": {"rows_per_sec": 99_999_999},
+        "streaming_stateful": {"rows_per_sec": 99_999_999},
+        "sf": 0.001,
+    }
+    line = compact_line(detail)
+    assert len(line) <= 1900, len(line)
+    parsed = json.loads(line)
+    assert parsed["queries_truncated"] is True
+    kept = list(parsed["queries"])
+    assert kept and kept == HEADLINE[: len(kept)]

@@ -212,9 +212,28 @@ def test_clear_session_memos_covers_every_memo():
     sentinel = ("__clear_session_memos_coverage_test__",)
     for stage in stages:
         stage.memo[sentinel] = None
-    tables.clear_session_memos(disk_artifacts=False)
+    tables.clear_session_memos()
     missed = [n for n, s in zip(names, stages) if s.memo]
     assert not missed, f"stages NOT cleared by clear_session_memos: {missed}"
+
+
+def test_clear_session_memos_wipes_only_the_given_corpus(tmp_path, monkeypatch):
+    """A disk wipe reaches exactly one corpus's component artifact, and
+    only when asked: wiping every corpus raced a concurrent sweep reading
+    another corpus's mapping (FILE_NOT_EXIST mid-scan)."""
+    from gmall_flink_spark.sources import materialize, tables
+
+    monkeypatch.setattr(materialize, "CACHE_ROOT", str(tmp_path))
+    artifacts = {}
+    for sf in ("/data/sf_a", "/data/sf_b"):
+        d = tmp_path / materialize.cache_key(sf) / "neardup_components-stamp"
+        d.mkdir(parents=True)
+        artifacts[sf] = d
+    tables.clear_session_memos()
+    assert all(d.exists() for d in artifacts.values())
+    tables.clear_session_memos(sf_dir="/data/sf_a")
+    assert not artifacts["/data/sf_a"].exists()
+    assert artifacts["/data/sf_b"].exists()
 
 
 def test_no_hand_rolled_session_memos():
