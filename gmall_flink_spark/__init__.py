@@ -18,6 +18,25 @@ Layout:
   queries/      the oracle-checked query catalog (driver contract)
   streaming/    Structured Streaming lifts of the 17 pipelines (§2.11)
   llm/          LLM-data-pipeline extras: dedup, similarity, multimodal
+
+Worker code: Spark's Python workers may run without this package on
+their import path (a driver that adds it to its own ``sys.path`` only),
+so the package is registered with cloudpickle BY VALUE below, once, for
+every submodule. A function shipped to a worker (a ``mapInPandas``
+kernel, an ``applyInPandasWithState`` function, an RDD closure) may
+therefore call the package's module-level functions: they travel with
+the task, code included. The rule: a shipped function names package
+functions and constants directly, never a package module object
+(``mm.decode_png``) — a module travels with its whole namespace,
+session-stage locks included, and fails at pickle time; nothing it
+reaches may hold a lock, a session or a DataFrame; and it must not
+import the package when it runs on the worker.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -48,8 +48,7 @@ def segment(df, text_col: str = "text", out_col: str = "toks"):
     util/SplitKeywordUDTF.java:19-34), the pinned deterministic whitespace
     tokenizer otherwise. Oracle-checked queries use ``tokenize`` directly —
     this surface is for production corpora where a real segmenter exists;
-    the jieba path is an Arrow-batched mapInPandas with a self-contained
-    closure (workers have no repo on PYTHONPATH)."""
+    the jieba path is an Arrow-batched mapInPandas."""
     try:
         import jieba  # noqa: F401  # pragma: no cover - not in test env
     except ImportError:

@@ -668,8 +668,7 @@ def _pregroup_labels(
     with a known bigger graph plumb parts/block through
     ``connected_components(pregroup_parts=..., pregroup_block=...)``.
 
-    The worker closure is self-contained (plain-dict union-find): Spark's
-    Python workers run without this repo on their PYTHONPATH."""
+    The worker closure is a plain-dict union-find."""
     import pandas as pd
 
     if parts is None:

@@ -24,12 +24,21 @@ and WAV bytes, deterministic from media_id) so the real decode paths are
 oracle-checkable: the DuckDB twin re-derives the expected dimensions and
 content sums from the GENERATIVE formula, never from the bytes — an
 independent check that the byte-level decode actually happened.
+
+Each container format has ONE reader and ONE writer, the module-level
+functions below; the ``mapInPandas`` kernels call them (the package
+travels to the Python workers by value, see ``gmall_flink_spark``).
 """
 
 from __future__ import annotations
 
+import io
+import struct
+import wave
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,12 +97,12 @@ DECODED_SCHEMA = StructType(
 REAL_IMG_W_MOD, REAL_IMG_H_MOD = 31, 17
 REAL_WAV_N_MOD, REAL_WAV_N_MIN = 50, 10
 
+PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
+
 
 def png_bytes(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
     """Minimal valid 8-bit RGB PNG (stdlib only): IHDR + one zlib IDAT of
     filter-0 scanlines + IEND, all CRCs real. A solid-color image."""
-    import struct
-    import zlib
 
     def chunk(tag: bytes, body: bytes) -> bytes:
         return (
@@ -106,25 +115,21 @@ def png_bytes(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
     ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
     raw = (b"\x00" + bytes(rgb) * width) * height
     return (
-        b"\x89PNG\r\n\x1a\n"
+        PNG_MAGIC
         + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
     )
 
 
-def decode_png(data: bytes) -> tuple[int, int, int]:
-    """REAL PNG decode (stdlib struct/zlib + numpy): walk the chunk stream,
-    parse IHDR, inflate the concatenated IDATs, reverse the per-scanline
-    filter (all five PNG filter types), and return
-    (width, height, sum of all decoded channel values). 8-bit RGB/gray
-    only — enough for a correctness-checkable decode without PIL."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if data[:8] != b"\x89PNG\r\n\x1a\n":
+def _png_plane(data: bytes) -> tuple[int, int, int, np.ndarray]:
+    """THE PNG reader (stdlib struct/zlib + numpy): walk the chunk stream,
+    parse IHDR, inflate the concatenated IDATs and reverse the per-scanline
+    filter (all five PNG filter types). Returns (width, height, channels,
+    plane), plane the decoded (height, width·channels) uint8 array. 8-bit
+    non-interlaced RGB (3 channels) or gray (1) only — enough for a
+    correctness-checkable decode without PIL; anything else raises."""
+    if data[:8] != PNG_MAGIC:
         raise ValueError("not a PNG")
     pos, idat, hdr = 8, [], None
     while pos + 8 <= len(data):
@@ -176,15 +181,17 @@ def decode_png(data: bytes) -> tuple[int, int, int]:
             raise ValueError(f"bad PNG filter {ftype}")
         out[y] = cur
         prev = cur
-    return width, height, int(out.sum(dtype=np.int64))
+    return width, height, nch, out
+
+
+def decode_png(data: bytes) -> tuple[int, int, int]:
+    """REAL PNG decode: (width, height, sum of all decoded channel values)."""
+    width, height, _, plane = _png_plane(data)
+    return width, height, int(plane.sum(dtype=np.int64))
 
 
 def wav_bytes(samples: list[int], rate: int) -> bytes:
     """Valid 16-bit mono PCM WAV via the stdlib ``wave`` writer."""
-    import io
-    import struct
-    import wave
-
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
@@ -194,25 +201,25 @@ def wav_bytes(samples: list[int], rate: int) -> bytes:
     return buf.getvalue()
 
 
-def decode_wav(data: bytes) -> tuple[int, int, int]:
-    """REAL WAV decode via the stdlib ``wave`` reader: RIFF header ->
-    (sample_rate, n_frames, sum of PCM16 samples)."""
-    import io
-    import wave
-
-    import numpy as np
-
+def _wav_pcm(data: bytes) -> tuple[int, int, np.ndarray]:
+    """THE WAV reader (stdlib ``wave``): RIFF header -> (sample_rate,
+    n_frames, PCM16 samples as an int16 array). 16-bit mono only; any
+    other layout or a malformed container raises."""
     with wave.open(io.BytesIO(data), "rb") as w:
         if w.getsampwidth() != 2 or w.getnchannels() != 1:
             raise ValueError("unsupported WAV layout")
         rate, n = w.getframerate(), w.getnframes()
         pcm = np.frombuffer(w.readframes(n), dtype=np.int16)
+    return rate, n, pcm
+
+
+def decode_wav(data: bytes) -> tuple[int, int, int]:
+    """REAL WAV decode: (sample_rate, n_frames, sum of PCM16 samples)."""
+    rate, n, pcm = _wav_pcm(data)
     return rate, n, int(pcm.sum(dtype=np.int64))
 
 
 def _mp4_box(tag: bytes, body: bytes) -> bytes:
-    import struct
-
     return struct.pack(">I", len(body) + 8) + tag + body
 
 
@@ -224,8 +231,6 @@ def mp4_bytes(duration: int, timescale: int, codecs: list[str]) -> bytes:
     fourcc — exactly the boxes a metadata pass reads (VERDICT r10 task 5;
     spec: ISO/IEC 14496-12). No sample data: this is the metadata-plumbing
     twin, the same honesty level as the PNG/WAV synthesizers."""
-    import struct
-
     ftyp = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
     mvhd = (
         b"\x00\x00\x00\x00"  # version 0 + flags
@@ -260,7 +265,6 @@ def parse_mp4(data: bytes) -> tuple[int, int, int, list[str]]:
     codecs). Raises on any malformed box (bad size, truncation, missing
     moov/mvhd/stsd) — the dead-letter contract: a corrupt blob becomes an
     error row, never a dead job."""
-    import struct
 
     def walk(start: int, end: int):
         pos = start
@@ -322,8 +326,8 @@ MP4_CORRUPT_MOD = 23
 
 
 def video_mp4_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize genuinely PARSEABLE minimal MP4 payloads for the video
-    slice (doc_id % 3 == 2), deterministic from doc_id:
+    """Synthesize genuinely PARSEABLE minimal MP4 payloads (``mp4_bytes``)
+    for the video slice (doc_id % 3 == 2), deterministic from doc_id:
 
       timescale  = 600 * (id % 4 + 1)
       duration   = timescale * (id % 30 + 1) + id % 97   (non-round ms)
@@ -335,48 +339,14 @@ def video_mp4_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same generative-oracle trick as media_real_table: the DuckDB twin
     re-derives every value from these formulas, never from the bytes, so
-    parity proves the box walk actually ran. Closure is self-contained
-    (workers have no repo on PYTHONPATH)."""
+    parity proves the box walk actually ran."""
     from gmall_flink_spark.sources.tables import spread
 
     ids = spread(
         table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
     ).where(F.col("doc_id") % 3 == 2)
-    corrupt_mod = MP4_CORRUPT_MOD
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        def box(tag: bytes, body: bytes) -> bytes:
-            # inline twin of module-level _mp4_box (parity pinned by test)
-            return struct.pack(">I", len(body) + 8) + tag + body
-
-        def mp4(duration: int, timescale: int, codecs: list) -> bytes:
-            ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-            mvhd = (
-                b"\x00\x00\x00\x00"
-                + struct.pack(">II", 0, 0)
-                + struct.pack(">II", timescale, duration)
-                + struct.pack(">I", 0x00010000)
-                + struct.pack(">H", 0x0100)
-                + b"\x00" * 10
-                + struct.pack(
-                    ">9I", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000
-                )
-                + b"\x00" * 24
-                + struct.pack(">I", len(codecs) + 1)
-            )
-            traks = b""
-            for c in codecs:
-                entry = box(c.encode("ascii"), b"\x00" * 6 + struct.pack(">H", 1))
-                stsd = box(
-                    b"stsd", b"\x00\x00\x00\x00" + struct.pack(">I", 1) + entry
-                )
-                traks += box(
-                    b"trak", box(b"mdia", box(b"minf", box(b"stbl", stsd)))
-                )
-            return ftyp + box(b"moov", box(b"mvhd", mvhd) + traks)
-
         names = ["avc1", "mp4a", "hvc1"]
         for pdf in batches:
             payloads = []
@@ -385,8 +355,8 @@ def video_mp4_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ts = 600 * (mid % 4 + 1)
                 dur = ts * (mid % 30 + 1) + mid % 97
                 codecs = [names[(mid // 3 + i) % 3] for i in range(mid % 2 + 1)]
-                data = mp4(dur, ts, codecs)
-                if mid % corrupt_mod == 0:
+                data = mp4_bytes(dur, ts, codecs)
+                if mid % MP4_CORRUPT_MOD == 0:
                     data = data[:12]
                 payloads.append(data)
             yield pd.DataFrame(
@@ -411,73 +381,17 @@ VIDEO_META_SCHEMA = StructType(
 
 def video_meta(df: DataFrame) -> DataFrame:
     """Arrow-batched MP4 metadata extraction over (media_id, payload):
-    box-walk each blob (inline twin of module-level parse_mp4), emit
-    (ok, timescale, duration, duration_ms = 1000*duration // timescale,
-    track_ct, comma-joined codec fourccs); a malformed file yields
-    ok=0 with NULL fields — dead-letter, never a dead task."""
+    box-walk each blob (``parse_mp4``), emit (ok, timescale, duration,
+    duration_ms = 1000*duration // timescale, track_ct, comma-joined codec
+    fourccs); a malformed file yields ok=0 with NULL fields — dead-letter,
+    never a dead task."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        def walk(data: bytes, start: int, end: int):
-            # inline twin of module-level parse_mp4's walk (incl. the
-            # size==1 largesize and size==0 to-end-of-scope forms)
-            pos = start
-            while pos < end:
-                if pos + 8 > end:
-                    raise ValueError("truncated box header")
-                (size,) = struct.unpack(">I", data[pos : pos + 4])
-                hdr = 8
-                if size == 1:
-                    if pos + 16 > end:
-                        raise ValueError("truncated largesize header")
-                    (size,) = struct.unpack(">Q", data[pos + 8 : pos + 16])
-                    hdr = 16
-                elif size == 0:
-                    size = end - pos
-                if size < hdr or pos + size > end:
-                    raise ValueError("bad box size")
-                yield data[pos + 4 : pos + 8], pos + hdr, pos + size
-                pos += size
-
-        def find(data: bytes, tag: bytes, start: int, end: int):
-            for t, s, e in walk(data, start, end):
-                if t == tag:
-                    return s, e
-            return None
-
-        def parse(data: bytes):
-            moov = find(data, b"moov", 0, len(data))
-            if moov is None:
-                raise ValueError("no moov box")
-            ts = dur = None
-            codecs = []
-            for tag, s, e in walk(data, *moov):
-                if tag == b"mvhd":
-                    if data[s] == 0:
-                        ts, dur = struct.unpack(">II", data[s + 12 : s + 20])
-                    else:
-                        (ts,) = struct.unpack(">I", data[s + 20 : s + 24])
-                        (dur,) = struct.unpack(">Q", data[s + 24 : s + 32])
-                elif tag == b"trak":
-                    cur = (s, e)
-                    for t in (b"mdia", b"minf", b"stbl", b"stsd"):
-                        cur = find(data, t, *cur)
-                        if cur is None:
-                            raise ValueError("trak missing stsd chain")
-                    fe = cur[0] + 8
-                    if fe + 8 > cur[1]:
-                        raise ValueError("empty stsd")
-                    codecs.append(data[fe + 4 : fe + 8].decode("ascii"))
-            if ts is None or not codecs:
-                raise ValueError("missing mvhd or tracks")
-            return int(ts), int(dur), len(codecs), codecs
-
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    ts, dur, n, codecs = parse(bytes(payload))
+                    ts, dur, n, codecs = parse_mp4(bytes(payload))
                     rows.append(
                         (int(mid), 1, ts, dur, 1000 * dur // ts, n, ",".join(codecs))
                     )
@@ -538,8 +452,8 @@ def media_real_table(
     """Synthesize genuinely DECODABLE payloads (valid PNG / WAV bytes) from
     `documents` doc_ids, per the generative formulas documented above:
 
-      doc_id % 3 == 0 -> image: real PNG, solid color
-      doc_id % 3 == 1 -> audio: real 16-bit mono PCM WAV
+      doc_id % 3 == 0 -> image: real PNG, solid color (``png_bytes``)
+      doc_id % 3 == 1 -> audio: real 16-bit mono PCM WAV (``wav_bytes``)
       doc_id % 3 == 2 -> video: stub payload byte (id%256) × ((id%100)+1)
                          (no video codec in this container — honest stub)
 
@@ -547,8 +461,7 @@ def media_real_table(
     same formulas, never from the bytes, so a green parity proves the
     byte-level decode in ``decode_media`` actually ran. Payload synthesis
     is an Arrow-batched mapInPandas (binary construction isn't
-    JVM-expressible); the closure is self-contained — Spark's Python
-    workers run without this repo on their PYTHONPATH.
+    JVM-expressible).
 
     ``kinds`` prunes BEFORE synthesis (a JVM-side doc_id-modulus filter),
     so a consumer that only wants audio never pays PNG/zlib construction
@@ -561,58 +474,24 @@ def media_real_table(
         mods = [i for i, k in enumerate(KINDS) if k in kinds]
         ids = ids.where((F.col("doc_id") % 3).isin(mods))
 
+    def row(mid: int):
+        m = mid % 3
+        if m == 0:
+            w, h = (mid % REAL_IMG_W_MOD) + 1, (mid % REAL_IMG_H_MOD) + 1
+            rgb = (mid % 256, mid * 7 % 256, mid * 13 % 256)
+            return "image", png_bytes(w, h, rgb), (w, h, None, None)
+        if m == 1:
+            n = (mid % REAL_WAV_N_MOD) + REAL_WAV_N_MIN
+            rate = 8000 + (mid % 3) * 4000
+            samples = [((mid * 31 + i * 17) % 65536) - 32768 for i in range(n)]
+            return "audio", wav_bytes(samples, rate), (None, None, rate, n)
+        return (
+            "video",
+            bytes([mid % 256]) * ((mid % 100) + 1),
+            (None, None, None, None),
+        )
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import struct
-        import wave
-        import zlib
-
-        def png(w: int, h: int, rgb: tuple[int, int, int]) -> bytes:
-            # inline twin of module-level png_bytes (parity pinned by test)
-            def chunk(tag: bytes, body: bytes) -> bytes:
-                return (
-                    struct.pack(">I", len(body))
-                    + tag
-                    + body
-                    + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-                )
-
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            raw = (b"\x00" + bytes(rgb) * w) * h
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(raw))
-                + chunk(b"IEND", b"")
-            )
-
-        def wav(samples: list[int], rate: int) -> bytes:
-            # inline twin of module-level wav_bytes
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(rate)
-                w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-            return buf.getvalue()
-
-        def row(mid: int):
-            m = mid % 3
-            if m == 0:
-                w, h = (mid % 31) + 1, (mid % 17) + 1
-                rgb = (mid % 256, mid * 7 % 256, mid * 13 % 256)
-                return "image", png(w, h, rgb), (w, h, None, None)
-            if m == 1:
-                n = (mid % 50) + 10
-                rate = 8000 + (mid % 3) * 4000
-                samples = [((mid * 31 + i * 17) % 65536) - 32768 for i in range(n)]
-                return "audio", wav(samples, rate), (None, None, rate, n)
-            return (
-                "video",
-                bytes([mid % 256]) * ((mid % 100) + 1),
-                (None, None, None, None),
-            )
-
         for pdf in batches:
             recs = [(int(mid), *row(int(mid))) for mid in pdf["doc_id"]]
             yield pd.DataFrame(
@@ -651,115 +530,35 @@ def decode_media(df: DataFrame) -> DataFrame:
 
     byte_len / checksum are computed for every payload (vectorized uint8
     sum); a NULL payload yields NULL byte_len/checksum and
-    decoder='error' instead of killing the task. The worker closure is self-contained (decode logic inlined;
-    parity with the module-level decode_png/decode_wav is pinned by
-    tests): Spark's Python workers run without this repo on their
-    PYTHONPATH (the grading driver's plain session), so nothing here may
-    be pickled by module reference.
-    """
+    decoder='error' instead of killing the task."""
+
+    def stub_sum(payload: bytes) -> tuple[int, int]:
+        # vectorized byte math: np.uint8 sum, not a Python per-byte
+        # loop — the difference between 3s and 0.3s per SF0.1 partition.
+        # NULL payload -> (None, None): the dead-letter posture must
+        # hold on the byte-math path too, not just inside dispatch.
+        if payload is None:
+            return None, None
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        return len(arr), int(arr.sum(dtype=np.int64)) % 2_147_483_647
+
+    def dispatch(payload: bytes, meta) -> tuple:
+        # -> (width, height, sample_rate, content_sum, decoder)
+        mw = meta["width"] if meta is not None else None
+        mh = meta["height"] if meta is not None else None
+        mr = meta["sample_rate"] if meta is not None else None
+        try:
+            if payload[:8] == PNG_MAGIC:
+                w, h, total = decode_png(payload)
+                return w, h, None, total, "png"
+            if payload[:4] == b"RIFF":
+                rate, _, total = decode_wav(payload)
+                return None, None, rate, total, "wav"
+        except Exception:
+            return None, None, None, None, "error"
+        return mw, mh, mr, None, "stub"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import struct
-        import wave
-        import zlib
-
-        import numpy as np
-
-        def stub_sum(payload: bytes) -> tuple[int, int]:
-            # vectorized byte math: np.uint8 sum, not a Python per-byte
-            # loop — the difference between 3s and 0.3s per SF0.1 partition.
-            # NULL payload -> (None, None): the dead-letter posture must
-            # hold on the byte-math path too, not just inside dispatch.
-            if payload is None:
-                return None, None
-            arr = np.frombuffer(payload, dtype=np.uint8)
-            return len(arr), int(arr.sum(dtype=np.int64)) % 2_147_483_647
-
-        def png_decode(data: bytes) -> tuple[int, int, int]:
-            # inline twin of module-level decode_png (parity pinned by test)
-            pos, idat, hdr = 8, [], None
-            while pos + 8 <= len(data):
-                (ln,) = struct.unpack(">I", data[pos : pos + 4])
-                tag = data[pos + 4 : pos + 8]
-                body = data[pos + 8 : pos + 8 + ln]
-                pos += 12 + ln
-                if tag == b"IHDR":
-                    hdr = struct.unpack(">IIBBBBB", body)
-                elif tag == b"IDAT":
-                    idat.append(body)
-                elif tag == b"IEND":
-                    break
-            if hdr is None or not idat:
-                raise ValueError("truncated PNG")
-            width, height, depth, color, _, _, interlace = hdr
-            if depth != 8 or color not in (0, 2) or interlace:
-                raise ValueError("unsupported PNG")
-            nch = 3 if color == 2 else 1
-            stride = width * nch
-            raw = zlib.decompress(b"".join(idat))
-            if len(raw) != (stride + 1) * height:
-                raise ValueError("bad PNG payload length")
-            total = 0
-            prev = np.zeros(stride, dtype=np.uint8)
-            for y in range(height):
-                rowb = raw[y * (stride + 1) : (y + 1) * (stride + 1)]
-                ftype = rowb[0]
-                line = np.frombuffer(rowb[1:], dtype=np.uint8).copy()
-                if ftype == 0:
-                    cur = line
-                elif ftype == 2:  # Up
-                    cur = line + prev
-                elif ftype in (1, 3, 4):  # Sub / Average / Paeth
-                    cur = np.zeros(stride, dtype=np.uint8)
-                    for x in range(stride):
-                        left = int(cur[x - nch]) if x >= nch else 0
-                        up = int(prev[x])
-                        ul = int(prev[x - nch]) if x >= nch else 0
-                        if ftype == 1:
-                            pred = left
-                        elif ftype == 3:
-                            pred = (left + up) // 2
-                        else:
-                            p = left + up - ul
-                            pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                            pred = (
-                                left
-                                if pa <= pb and pa <= pc
-                                else (up if pb <= pc else ul)
-                            )
-                        cur[x] = (int(line[x]) + pred) & 0xFF
-                else:
-                    raise ValueError(f"bad PNG filter {ftype}")
-                total += int(cur.sum(dtype=np.int64))
-                prev = cur
-            return width, height, total
-
-        def wav_decode(data: bytes) -> tuple[int, int]:
-            # inline twin of module-level decode_wav
-            with wave.open(io.BytesIO(data), "rb") as w:
-                if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                    raise ValueError("unsupported WAV layout")
-                rate, n = w.getframerate(), w.getnframes()
-                pcm = np.frombuffer(w.readframes(n), dtype=np.int16)
-            return rate, int(pcm.sum(dtype=np.int64))
-
-        def dispatch(payload: bytes, meta) -> tuple:
-            # -> (width, height, sample_rate, content_sum, decoder)
-            mw = meta["width"] if meta is not None else None
-            mh = meta["height"] if meta is not None else None
-            mr = meta["sample_rate"] if meta is not None else None
-            try:
-                if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                    w, h, total = png_decode(payload)
-                    return w, h, None, total, "png"
-                if payload[:4] == b"RIFF":
-                    rate, total = wav_decode(payload)
-                    return None, None, rate, total, "wav"
-            except Exception:
-                return None, None, None, None, "error"
-            return mw, mh, mr, None, "stub"
-
         for pdf in batches:
             sizes = pdf["payload"].map(stub_sum)
             dec = [
@@ -836,10 +635,7 @@ def phash_media(df: DataFrame, bits: int = 16) -> DataFrame:
     Arrow-batched Python path a real image/audio phash takes (pixels ->
     DCT signs, audio -> spectral-band signs). Kernel-vs-JVM bit equality
     is pinned by test_phash_media_matches_jvm_simhash, which is what lets
-    the pairing query's SQL oracle stand in for the Python kernel.
-
-    The worker closure is self-contained (hash logic inlined): Spark's
-    Python workers run without this repo on their PYTHONPATH."""
+    the pairing query's SQL oracle stand in for the Python kernel."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -894,21 +690,15 @@ def audio_features(df: DataFrame) -> DataFrame:
     decode in a training-data pipeline (silence/clipping filters, energy
     stratification): per clip, integer-exact energy (sum of squared PCM16
     samples), zero-crossing count (sign flips of the non-negative
-    predicate), and sample extrema. Non-RIFF payloads are skipped (the
-    caller filters kind=='audio'; skipping keeps the operator total on a
-    mixed table). All features are integers so the DuckDB oracle re-derives
-    them exactly from the generative formula — proving the samples really
-    came out of the RIFF container.
-
-    The worker closure is self-contained: Spark's Python workers run
-    without this repo on their PYTHONPATH."""
+    predicate), and sample extrema. Payloads it cannot use — non-RIFF,
+    a corrupt or non-PCM16-mono RIFF, no samples — are skipped (the caller
+    filters kind=='audio'; skipping keeps the operator total on a mixed
+    table and one bad blob from killing the task). All features are
+    integers so the DuckDB oracle re-derives them exactly from the
+    generative formula — proving the samples really came out of the RIFF
+    container (``_wav_pcm``, the reader ``decode_media`` uses)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
         for pdf in batches:
             out = {k: [] for k in
                    ("media_id", "sample_rate", "n_frames", "energy_sum",
@@ -916,11 +706,12 @@ def audio_features(df: DataFrame) -> DataFrame:
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 if payload is None or payload[:4] != b"RIFF":
                     continue
-                with wave.open(io.BytesIO(payload), "rb") as w:
-                    if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                        continue
-                    rate, n = w.getframerate(), w.getnframes()
-                    pcm = np.frombuffer(w.readframes(n), dtype=np.int16)
+                try:
+                    rate, n, pcm = _wav_pcm(payload)
+                except Exception:
+                    continue
+                if not len(pcm):
+                    continue
                 s = pcm.astype(np.int64)
                 nonneg = s >= 0
                 out["media_id"].append(int(mid))
@@ -950,85 +741,27 @@ CHANNEL_STATS_SCHEMA = StructType(
 def image_channel_stats(df: DataFrame) -> DataFrame:
     """Per-channel pixel sums from real PNG decodes — the image-side
     feature-extraction twin of ``audio_features`` (color-cast / blank-frame
-    filters in an image training pipeline). Reuses the same chunk-walk +
-    unfilter decode as the worker in ``decode_media``, then folds the
-    (h, w·3) plane per channel. Non-PNG payloads are skipped. Integer
-    sums, so the oracle re-derives them from the generative RGB formula.
-
-    The worker closure is self-contained: Spark's Python workers run
-    without this repo on their PYTHONPATH."""
+    filters in an image training pipeline). Decodes with ``_png_plane``,
+    the reader ``decode_media`` uses, then folds the (h, w·3) plane per
+    channel. Payloads it cannot use — non-PNG, a corrupt PNG, a non-RGB
+    (e.g. grayscale) PNG — are skipped, so one bad blob never kills the
+    task. Integer sums, so the oracle re-derives them from the generative
+    RGB formula."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        import numpy as np
-
-        def decode(data: bytes):
-            pos, idat, hdr = 8, [], None
-            while pos + 8 <= len(data):
-                (ln,) = struct.unpack(">I", data[pos : pos + 4])
-                tag = data[pos + 4 : pos + 8]
-                body = data[pos + 8 : pos + 8 + ln]
-                pos += 12 + ln
-                if tag == b"IHDR":
-                    hdr = struct.unpack(">IIBBBBB", body)
-                elif tag == b"IDAT":
-                    idat.append(body)
-                elif tag == b"IEND":
-                    break
-            if hdr is None or not idat:
-                raise ValueError("truncated PNG")
-            width, height, depth, color, _, _, interlace = hdr
-            if depth != 8 or color != 2 or interlace:
-                raise ValueError("unsupported PNG")
-            stride = width * 3
-            raw = zlib.decompress(b"".join(idat))
-            if len(raw) != (stride + 1) * height:
-                raise ValueError("bad PNG payload length")
-            out = np.zeros((height, stride), dtype=np.uint8)
-            prev = np.zeros(stride, dtype=np.uint8)
-            for y in range(height):
-                rowb = raw[y * (stride + 1) : (y + 1) * (stride + 1)]
-                ftype = rowb[0]
-                line = np.frombuffer(rowb[1:], dtype=np.uint8).copy()
-                if ftype == 0:
-                    cur = line
-                elif ftype == 2:
-                    cur = line + prev
-                elif ftype in (1, 3, 4):
-                    cur = np.zeros(stride, dtype=np.uint8)
-                    for x in range(stride):
-                        left = int(cur[x - 3]) if x >= 3 else 0
-                        up = int(prev[x])
-                        ul = int(prev[x - 3]) if x >= 3 else 0
-                        if ftype == 1:
-                            pred = left
-                        elif ftype == 3:
-                            pred = (left + up) // 2
-                        else:
-                            p = left + up - ul
-                            pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                            pred = (
-                                left
-                                if pa <= pb and pa <= pc
-                                else (up if pb <= pc else ul)
-                            )
-                        cur[x] = (int(line[x]) + pred) & 0xFF
-                else:
-                    raise ValueError("bad PNG filter")
-                out[y] = cur
-                prev = cur
-            return width, height, out.reshape(height, width, 3)
-
         for pdf in batches:
             cols = {k: [] for k in
                     ("media_id", "width", "height", "r_sum", "g_sum", "b_sum")}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None or payload[:8] != b"\x89PNG\r\n\x1a\n":
+                if payload is None or payload[:8] != PNG_MAGIC:
                     continue
-                w, h, px = decode(payload)
-                sums = px.sum(axis=(0, 1), dtype=np.int64)
+                try:
+                    w, h, nch, plane = _png_plane(payload)
+                except Exception:
+                    continue
+                if nch != 3:
+                    continue
+                sums = plane.reshape(h, w, 3).sum(axis=(0, 1), dtype=np.int64)
                 cols["media_id"].append(int(mid))
                 cols["width"].append(w)
                 cols["height"].append(h)
@@ -1195,8 +928,8 @@ def parse_jpeg(data: bytes) -> tuple[int, int, int, int, str, int, int]:
 
 
 def image_jpeg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize genuinely PARSEABLE minimal JFIF payloads for the image
-    slice (doc_id % 3 == 0), deterministic from doc_id:
+    """Synthesize genuinely PARSEABLE minimal JFIF payloads (``jpeg_bytes``)
+    for the image slice (doc_id % 3 == 0), deterministic from doc_id:
 
       width       = (id % 200) + 16
       height      = (id % 120) + 16
@@ -1210,55 +943,30 @@ def image_jpeg_table(spark: SparkSession, sf_dir: str) -> DataFrame:
           a cut APP0 header) — the dead-letter path
 
     Same generative-oracle trick as video_mp4_table: the DuckDB twin
-    re-derives every value from these formulas, never from the bytes.
-    Closure is self-contained (workers have no repo on PYTHONPATH)."""
+    re-derives every value from these formulas, never from the bytes."""
     from gmall_flink_spark.sources.tables import spread
 
     ids = spread(
         table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
     ).where(F.col("doc_id") % 3 == 0)
-    corrupt_mod = JPEG_CORRUPT_MOD
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def seg(marker: int, body: bytes) -> bytes:
-            # inline twin of module-level _jpeg_seg (parity pinned by test)
-            return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-        def jpeg(w, h, nc, prog, xd, yd, scan, sub420):
-            app0 = seg(
-                0xE0,
-                b"JFIF\x00" + bytes([1, 2]) + b"\x00"
-                + xd.to_bytes(2, "big") + yd.to_bytes(2, "big") + b"\x00\x00",
-            )
-            dqt = seg(0xDB, bytes([0]) + bytes((i * 3) % 255 + 1 for i in range(64)))
-            comps = b""
-            for i in range(nc):
-                hv = 0x22 if (nc >= 3 and i == 0 and sub420) else 0x11
-                comps += bytes([i + 1, hv, 0])
-            sof = seg(
-                0xC2 if prog else 0xC0,
-                bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-                + bytes([nc]) + comps,
-            )
-            dht = seg(0xC4, bytes([0x00]) + bytes(16))
-            sos = seg(
-                0xDA,
-                bytes([nc]) + b"".join(bytes([i + 1, 0]) for i in range(nc))
-                + bytes([0, 63, 0]),
-            )
-            return b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
         for pdf in batches:
             payloads = []
             for mid in pdf["doc_id"]:
                 mid = int(mid)
-                w, h = (mid % 200) + 16, (mid % 120) + 16
-                nc = 1 if mid % 5 == 0 else 3
-                prog = mid % 7 == 0
-                xd, yd = (mid % 97) + 1, (mid % 89) + 1
                 scan = bytes((mid * 31 + i * 7) % 255 for i in range((mid % 40) + 4))
-                data = jpeg(w, h, nc, prog, xd, yd, scan, sub420=(mid % 2 == 0))
-                if mid % corrupt_mod == 0:
+                data = jpeg_bytes(
+                    (mid % 200) + 16,
+                    (mid % 120) + 16,
+                    1 if mid % 5 == 0 else 3,
+                    mid % 7 == 0,
+                    (mid % 97) + 1,
+                    (mid % 89) + 1,
+                    scan,
+                    subsample_420=(mid % 2 == 0),
+                )
+                if mid % JPEG_CORRUPT_MOD == 0:
                     data = data[:6]
                 payloads.append(data)
             yield pd.DataFrame(
@@ -1285,83 +993,16 @@ JPEG_META_SCHEMA = StructType(
 
 def jpeg_meta(df: DataFrame) -> DataFrame:
     """Arrow-batched JPEG metadata extraction over (media_id, payload):
-    marker-walk each blob (inline twin of module-level parse_jpeg), emit
-    (ok, width, height, ncomp, progressive, subsampling, densities); a
-    malformed file yields ok=0 with NULL fields — dead-letter, never a
-    dead task."""
+    marker-walk each blob (``parse_jpeg``), emit (ok, width, height, ncomp,
+    progressive, subsampling, densities); a malformed file yields ok=0
+    with NULL fields — dead-letter, never a dead task."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def parse(data: bytes):
-            if len(data) < 4 or data[0:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG (bad SOI)")
-            pos = 2
-            width = height = ncomp = progressive = None
-            sampling = []
-            xdens = ydens = 0
-            while True:
-                if pos + 2 > len(data):
-                    raise ValueError("truncated marker")
-                if data[pos] != 0xFF:
-                    raise ValueError("marker sync lost")
-                while data[pos + 1] == 0xFF:
-                    pos += 1
-                    if pos + 2 > len(data):
-                        raise ValueError("truncated fill run")
-                marker = data[pos + 1]
-                pos += 2
-                if marker == 0xD9:
-                    break
-                if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                    continue
-                if pos + 2 > len(data):
-                    raise ValueError("truncated segment length")
-                seg_len = int.from_bytes(data[pos : pos + 2], "big")
-                if seg_len < 2 or pos + seg_len > len(data):
-                    raise ValueError("bad segment length")
-                body = data[pos + 2 : pos + seg_len]
-                pos += seg_len
-                if marker in (0xC0, 0xC1, 0xC2):
-                    if len(body) < 6 or len(body) < 6 + 3 * body[5]:
-                        raise ValueError("truncated SOF")
-                    height = int.from_bytes(body[1:3], "big")
-                    width = int.from_bytes(body[3:5], "big")
-                    ncomp = body[5]
-                    sampling = [
-                        (body[7 + 3 * i] >> 4, body[7 + 3 * i] & 0x0F)
-                        for i in range(ncomp)
-                    ]
-                    progressive = 1 if marker == 0xC2 else 0
-                elif marker == 0xE0 and body[:5] == b"JFIF\x00":
-                    if len(body) < 12:
-                        raise ValueError("truncated JFIF APP0")
-                    xdens = int.from_bytes(body[8:10], "big")
-                    ydens = int.from_bytes(body[10:12], "big")
-                elif marker == 0xDA:
-                    while True:
-                        if pos + 1 >= len(data):
-                            raise ValueError("truncated scan")
-                        if data[pos] == 0xFF and data[pos + 1] != 0x00 and not (
-                            0xD0 <= data[pos + 1] <= 0xD7
-                        ):
-                            break
-                        pos += 1
-            if width is None or ncomp is None:
-                raise ValueError("no SOF frame header")
-            if ncomp == 1:
-                sub = "gray"
-            elif all(hv == (1, 1) for hv in sampling):
-                sub = "444"
-            elif sampling[0] == (2, 2) and all(hv == (1, 1) for hv in sampling[1:]):
-                sub = "420"
-            else:
-                sub = "other"
-            return width, height, ncomp, progressive, sub, xdens, ydens
-
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    w, h, nc, prog, sub, xd, yd = parse(bytes(payload))
+                    w, h, nc, prog, sub, xd, yd = parse_jpeg(bytes(payload))
                     rows.append((int(mid), 1, w, h, nc, prog, sub, xd, yd))
                 except Exception:
                     rows.append(

@@ -313,8 +313,7 @@ def broadcast_cosine_hits(
     ``threshold``, and the max such cosine — rows with zero hits are
     dropped. The vectorized twin of a broadcast nested-loop cosine join
     (the embed_decontaminate hot path): the fixed matrix rides the task
-    closure by value (the worker-PYTHONPATH-safe form — nested function,
-    imports inside), and each Arrow batch scores as ONE numpy matmul
+    closure, and each Arrow batch scores as ONE numpy matmul
     instead of an interpreted per-pair fold — the same kernel swap
     near_dup_pairs_matmul applies past ~10³-vector blocks. BLAS
     accumulation order can differ from the fold at the 1e-15 scale,

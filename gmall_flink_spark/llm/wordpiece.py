@@ -101,10 +101,8 @@ def exact_top_pair(scored: DataFrame) -> tuple | None:
     #partitions finalists on the driver. Returns
     (pair_ct, cnt_a, cnt_b, a, b).
 
-    The comparator is a self-contained nested closure ON PURPOSE
-    (the functions/text.segment pattern): cloudpickle ships it by value,
-    so executors need no repo on PYTHONPATH — a module-level comparator
-    broke under the grading driver's plain session.
+    The comparator reaches the executors by value, as every package
+    function does (see the package docstring).
 
     Session contract (ADVICE r13 #3): requires a CLASSIC session — .rdd
     is unimplemented under Spark Connect. The entry environment is pinned

@@ -225,8 +225,7 @@ def custom_agg_sumsq_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom UDAF via Arrow GROUPED_AGG pandas_udf (U3: the reference's
     ReduceFunction/WindowFunction pairs generalized to user aggregates).
     Integer-exact: value -> rounded cents -> sum of squares, so the oracle
-    compares int64s, not FP. The closure is self-contained (worker has no
-    repo on PYTHONPATH)."""
+    compares int64s, not FP."""
     from pyspark.sql.functions import pandas_udf
 
     # GROUPED_AGG requires a float return hint; the sum stays < 2^53 so the

@@ -229,25 +229,6 @@ def _parsed(spark: SparkSession, sf_dir: str, name: str, raw_builder) -> DataFra
     )
 
 
-def orders_raw_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """order_info raw JSON value strings at rest (corrupt rows included) —
-    for consumers of the pre-parse topic (P1 dead-letter accounting)."""
-    from gmall_flink_spark.sources.materialize import materialized
-
-    return materialized(
-        spark, sf_dir, "order_info_raw", lambda: orders_cdc_json(spark, sf_dir)
-    )
-
-
-def cart_raw_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cart_info raw JSON value strings at rest (corrupt rows included)."""
-    from gmall_flink_spark.sources.materialize import materialized
-
-    return materialized(
-        spark, sf_dir, "cart_info_raw", lambda: cart_cdc_json(spark, sf_dir)
-    )
-
-
 def _dead(spark: SparkSession, sf_dir: str, name: str, raw_builder) -> DataFrame:
     """Dead-letter quarantine at rest: the bronze landing step splits each
     topic into parsed envelope + malformed rows ONCE at ingest

@@ -98,8 +98,9 @@ def first_per_day_stream(sdf: DataFrame, key: str, ts: str = "ts") -> DataFrame:
     out_schema = StructType(list(sdf.schema.fields)).add("cur_date", "string")
     state_schema = "seen_days array<string>"
 
-    # worker closures must be self-contained: Spark's Python workers run
-    # without this repo on their PYTHONPATH under a foreign driver session
+    # fn and the module-level _batch_sorted it calls reach the Python
+    # workers by value, as every package function does (see the package
+    # docstring), so the workers need no import path to this repo
     def fn(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:

@@ -2,7 +2,8 @@
 """One-decade scale checkpoint (VERDICT r10 task 7): time the r01-headline
 bench subset at sf0.1 AND at a 10x-fact replica of it (~sf1: 6M lineitem
 rows, 1M orders, 1M events, 600k docs) in ONE session, and write the
-per-query ratio table to BENCH_LOCAL_sf1.json.
+per-query ratio table to .tmp/BENCH_LOCAL_sf1.json (gitignored: the
+committed BENCH_LOCAL_sf1.json changes only by a deliberate copy).
 
 No sf1 testdata exists in this environment, so the decade comes from the
 sf1_replica construction (dims stay 1x — at scale dims grow far slower
@@ -94,7 +95,8 @@ def main() -> None:
         "errors": errors,
         "queries": rows,
     }
-    with open(os.path.join(REPO, "BENCH_LOCAL_sf1.json"), "w") as fh:
+    os.makedirs(os.path.join(REPO, ".tmp"), exist_ok=True)
+    with open(os.path.join(REPO, ".tmp", "BENCH_LOCAL_sf1.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({kk: out[kk] for kk in
                       ("sf01_total_sec", "sf1_total_sec", "ratio_median")}))

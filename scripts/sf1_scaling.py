@@ -8,8 +8,10 @@ sf1_checkpoint construction: documents token-salted, facts key-shifted,
 dims 1x) under THIS session's core count ($SPARK_GRAFT_CPUS via
 session.get_spark), where per-query data is millions of rows and core
 scaling is observable. Run it once per core count; each run writes
-SCALING_SF1_c<cpus>.json, and when both files exist the second run also
-writes the combined ratio table SCALING_SF1_r15.json.
+.tmp/SCALING_SF1_c<cpus>.json, and when both files exist the second run
+also writes the combined ratio table .tmp/SCALING_SF1_r15.json. .tmp/ is
+gitignored: the committed SCALING_SF1_*.json change only by a deliberate
+copy.
 
 Methodology is bench.py's (``bench.prepare`` + ``bench.time_query``):
 noop sink, terminal-sort strip, synth topics materialized untimed, session
@@ -27,6 +29,7 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = os.path.join(REPO, ".tmp")
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
@@ -93,13 +96,14 @@ def main() -> None:
         "total_sec": round(sum(rows.values()), 2),
         "queries": rows,
     }
-    mine = os.path.join(REPO, f"SCALING_SF1_c{cpus}.json")
+    os.makedirs(OUT, exist_ok=True)
+    mine = os.path.join(OUT, f"SCALING_SF1_c{cpus}.json")
     with open(mine, "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({"cpus": cpus, "total_sec": out["total_sec"]}))
 
     others = [
-        os.path.join(REPO, f"SCALING_SF1_c{c}.json")
+        os.path.join(OUT, f"SCALING_SF1_c{c}.json")
         for c in (8, 32)
         if c != cpus
     ]
@@ -122,7 +126,7 @@ def main() -> None:
             "total_high_sec": hi["total_sec"],
             "ratio_low_over_high": ratios,
         }
-        with open(os.path.join(REPO, "SCALING_SF1_r15.json"), "w") as fh:
+        with open(os.path.join(OUT, "SCALING_SF1_r15.json"), "w") as fh:
             json.dump(combined, fh, indent=1)
         print(json.dumps(combined["ratio_low_over_high"]))
     spark.stop()

@@ -11,6 +11,22 @@ from gmall_flink_spark.llm.multimodal import decode_media, decode_stub, media_ta
 SF = "/root/testdata/sf0.001"
 
 
+def _png(w: int, h: int, color: int, raw: bytes) -> bytes:
+    """A hand-built 8-bit PNG of color type ``color`` over the already
+    filtered scanlines ``raw``."""
+    import struct
+    import zlib
+
+    def chunk(tag, body):
+        return (struct.pack(">I", len(body)) + tag + body
+                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
+
+    return (b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(raw))
+            + chunk(b"IEND", b""))
+
+
 def test_decode_checksum_matches_python(spark):
     docs = (
         media_table(spark, SF)
@@ -63,18 +79,11 @@ def test_png_wav_codec_roundtrip():
 
     # hand-built PNG using Sub(1)/Up(2)/Average(3)/Paeth(4) filtered rows:
     # the decoder must reconstruct the same pixels as the filter-0 encoding
-    import struct
-    import zlib
-
     import numpy as np
 
     w, h, nch = 5, 4, 3
     rng = np.random.RandomState(7)
     px = rng.randint(0, 256, size=(h, w * nch)).astype(np.uint8)
-
-    def chunk(tag, body):
-        return (struct.pack(">I", len(body)) + tag + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
 
     rows = []
     prev = np.zeros(w * nch, dtype=np.uint8)
@@ -98,19 +107,16 @@ def test_png_wav_codec_roundtrip():
             filt[x] = (int(cur[x]) - pred) & 0xFF
         rows.append(bytes([ftype]) + filt.tobytes())
         prev = cur
-    data = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"".join(rows)))
-            + chunk(b"IEND", b""))
+    data = _png(w, h, 2, b"".join(rows))
     from gmall_flink_spark.llm.multimodal import decode_png as dp
 
     assert dp(data) == (w, h, int(px.sum(dtype=np.int64)))
 
 
 def test_real_decode_dispatch_matches_formulas(spark):
-    """decode_media over media_real_table: the worker's inlined decoders
-    must agree with the generative formulas AND the module-level twins —
-    proving the byte-level decode ran inside the Arrow worker."""
+    """decode_media over media_real_table: the decoders running inside the
+    Arrow worker must agree with the generative formulas — proving the
+    byte-level decode ran there."""
     from gmall_flink_spark.llm.multimodal import media_real_table
 
     rows = (
@@ -242,8 +248,8 @@ def test_media_real_table_kind_pruning(spark):
 
 
 def test_mp4_roundtrip_and_corrupt():
-    """mp4_bytes -> parse_mp4 roundtrip (module-level pair; the inline
-    mapInPandas twins mirror these byte-for-byte): timescale/duration/
+    """mp4_bytes -> parse_mp4 roundtrip (the pair video_mp4_table and
+    video_meta run in their mapInPandas kernels): timescale/duration/
     track fourccs come back out of the boxes; truncation, bad sizes, and
     a missing moov raise (the dead-letter contract)."""
     import pytest
@@ -315,8 +321,8 @@ def test_video_meta_matches_generative_formulas(spark):
 
 
 def test_jpeg_roundtrip_and_corrupt():
-    """jpeg_bytes -> parse_jpeg roundtrip (module-level pair; the inline
-    mapInPandas twins mirror these byte-for-byte): dimensions, component
+    """jpeg_bytes -> parse_jpeg roundtrip (the pair image_jpeg_table and
+    jpeg_meta run in their mapInPandas kernels): dimensions, component
     count, progressive flag, subsampling class, and JFIF densities come
     back out of the segments; truncation, a lost marker sync, and a
     missing SOF raise (the dead-letter contract). Entropy-scan handling
@@ -382,34 +388,35 @@ def test_jpeg_meta_matches_generative_formulas(spark):
         assert r["xdensity"] == (mid % 97) + 1 and r["ydensity"] == (mid % 89) + 1
 
 
-def test_jpeg_inline_twin_parity(spark):
-    """The mapInPandas closures inside image_jpeg_table/jpeg_meta are
-    inline twins of module-level jpeg_bytes/parse_jpeg — pin byte-for-byte
-    synthesis parity and field-for-field parse parity on the same ids."""
+def test_feature_kernels_skip_unusable_blobs(spark):
+    """image_channel_stats / audio_features skip a payload they cannot use
+    — a truncated PNG, a grayscale PNG, a corrupt RIFF — like a non-PNG or
+    non-RIFF one, instead of failing the task: a 100 TB job must never
+    die on one blob. The healthy rows of the same batch are still there."""
     from gmall_flink_spark.llm.multimodal import (
-        image_jpeg_table,
-        jpeg_bytes,
-        parse_jpeg,
+        audio_features,
+        image_channel_stats,
+        png_bytes,
+        wav_bytes,
     )
 
-    got = {
-        r["media_id"]: bytes(r["payload"])
-        for r in image_jpeg_table(spark, SF).limit(40).collect()
-    }
-    assert got
-    for mid, payload in got.items():
-        expect = jpeg_bytes(
-            (mid % 200) + 16,
-            (mid % 120) + 16,
-            1 if mid % 5 == 0 else 3,
-            mid % 7 == 0,
-            (mid % 97) + 1,
-            (mid % 89) + 1,
-            bytes((mid * 31 + i * 7) % 255 for i in range((mid % 40) + 4)),
-            subsample_420=(mid % 2 == 0),
-        )
-        if mid % 29 == 0:
-            expect = expect[:6]
-        assert payload == expect, f"synthesis twin drift at id {mid}"
-        if mid % 29 != 0:
-            parse_jpeg(payload)  # module parser accepts the worker's bytes
+    good_png = png_bytes(3, 2, (10, 20, 30))
+    good_wav = wav_bytes([5, -3, 7], 8000)
+    df = spark.createDataFrame(
+        [
+            (1, good_png),
+            (2, good_png[:40]),  # truncated inside IDAT
+            (3, _png(2, 2, 0, b"\x00\x63\x63" * 2)),  # grayscale: no RGB
+            (4, good_wav),
+            (5, b"RIFFxxxxWAVE"),  # RIFF magic, no fmt/data chunks
+            (6, good_wav[:-1]),  # odd-length PCM tail
+            (7, wav_bytes([], 8000)),  # no samples to take features of
+        ],
+        "media_id long, payload binary",
+    ).repartition(1)
+    img = {r["media_id"]: r for r in image_channel_stats(df).collect()}
+    assert set(img) == {1}
+    assert (img[1]["r_sum"], img[1]["g_sum"], img[1]["b_sum"]) == (60, 120, 180)
+    aud = {r["media_id"]: r for r in audio_features(df).collect()}
+    assert set(aud) == {4}
+    assert (aud[4]["energy_sum"], aud[4]["s_min"], aud[4]["s_max"]) == (83, -3, 7)
