@@ -402,12 +402,7 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid as _uuid
 
-    from gmall_flink_spark.sinks._bucketed import (
-        BUCKET_COL,
-        cluster_by_bucket,
-        read_state,
-        with_bucket,
-    )
+    from gmall_flink_spark.sinks._bucketed import read_state, with_bucket, write_bucket_dir
 
     path = _components_artifact_path(sf_dir)
     empty_marker = os.path.join(path, "_EMPTY")
@@ -420,11 +415,8 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # write, 0.4-0.8 s to read, against 0.6 s and half the read) —
         # the layout the incremental merger and every cold read scan.
         bucketed = with_bucket(mapping, ["doc_id"], COMPONENTS_N_BUCKETS)
-        cluster_by_bucket(bucketed).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        if not any(n.startswith("__bucket=") for n in os.listdir(tmp)):
+        if not write_bucket_dir(bucketed, tmp, COMPONENTS_N_BUCKETS):
             open(os.path.join(tmp, "_EMPTY"), "w").close()
-        with open(os.path.join(tmp, "_N_BUCKETS"), "w") as fh:
-            fh.write(str(COMPONENTS_N_BUCKETS))
         try:
             os.rename(tmp, path)  # losers of a build race read the winner
         except OSError:
@@ -457,26 +449,23 @@ def merge_components_artifact(
     arrive from the ingest pipeline."""
     from gmall_flink_spark.llm.dedup import merge_components
     from gmall_flink_spark.sinks._bucketed import (
-        check_buckets,
+        has_bucket_dirs,
+        merge_buckets,
         pin_batch,
-        read_prior,
         read_state,
-        swap_buckets,
-        touched_buckets,
         unpin_batch,
-        with_bucket,
     )
 
-    check_buckets(path, n_buckets)
     empty_marker = os.path.join(path, "_EMPTY")
-    has_buckets = os.path.exists(path) and any(
-        n.startswith("__bucket=") for n in os.listdir(path)
-    )
-    if os.path.exists(empty_marker) or not has_buckets:
+    if os.path.exists(empty_marker) or not has_bucket_dirs(path):
         # fresh or empty-marked state: the first delta seeds the table
         old = spark.createDataFrame([], "doc_id bigint, component bigint")
     else:
         old = read_state(spark, path)
+
+    def batch_wins_on_doc_id(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        return prior.join(batch.select("doc_id"), "doc_id", "left_anti").unionAll(batch)
+
     # pin the batch edges once (merge_components consumes them from three
     # joins and checkpoints NOTHING itself — caller-owned materialization,
     # freed deterministically below, the pin_batch discipline); the
@@ -487,22 +476,9 @@ def merge_components_artifact(
         # delta = rows the merge changed or added; (doc_id, component) rows
         # the old table already holds survive untouched in their buckets
         delta = full.join(old, ["doc_id", "component"], "left_anti")
-        pinned = pin_batch(with_bucket(delta, ["doc_id"], n_buckets))
-        try:
-            buckets = touched_buckets(pinned)
-            if not buckets:
-                return
-            prior = read_prior(spark, path, buckets)
-            merged = pinned
-            if prior is not None:
-                merged = prior.join(
-                    pinned.select("doc_id"), "doc_id", "left_anti"
-                ).select(*pinned.columns).unionAll(pinned)
-            swap_buckets(merged, path, buckets, n_buckets)
-            if os.path.exists(empty_marker):
-                os.remove(empty_marker)
-        finally:
-            unpin_batch(pinned)
+        touched = merge_buckets(path, delta, ["doc_id"], n_buckets, batch_wins_on_doc_id)
+        if touched and os.path.exists(empty_marker):
+            os.remove(empty_marker)
     finally:
         unpin_batch(edges)
 

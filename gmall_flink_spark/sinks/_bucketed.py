@@ -1,7 +1,8 @@
 """Hash-bucketed parquet state tables for the MERGE-style sinks.
 
 State is laid out as ``state_path/__bucket=<i>/...`` with
-``__bucket = pmod(xxhash64(keys), n_buckets)``. A micro-batch then:
+``__bucket = pmod(xxhash64(keys), n_buckets)``. ``merge_buckets`` runs
+one micro-batch through the whole protocol:
 
 1. computes the bucket of every batch row,
 2. reads prior state *only for the touched buckets* (partition pruning on
@@ -14,43 +15,85 @@ total accumulated state — the local-parquet analogue of a Delta/Iceberg
 ``MERGE INTO`` over a table partitioned by key bucket, which is exactly
 what this sink becomes on a real cluster. The only driver-side collect is
 the set of touched bucket ids (<= n_buckets ints — metadata, not data).
+
+The merge contract: a sink passes ``merge(batch, prior)``, a function of
+two frames that both carry ``__bucket`` and the batch's columns —
+``batch`` the bucketed, pinned batch rows, ``prior`` the state rows of
+the touched buckets. ``prior`` is never None: with no state yet it is an
+empty local relation, and the optimizer prunes a union or an anti-join
+with it, so the first batch plans exactly as if the branch were absent.
+``merge`` returns the new rows of the touched buckets, with
+``__bucket``. A batch with no rows touches no bucket and writes nothing.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "__bucket"
+OLD_SUFFIX = ".__old__"
 _META = "_N_BUCKETS"
-_OLD_SUFFIX = ".__old__"
+
+
+def swap_dir(src: str, dst: str) -> None:
+    """Install directory ``src`` at ``dst`` crash-safely: move the live
+    ``dst`` ASIDE (atomic rename), install ``src``, drop the aside.
+    rmtree-then-move would lose the live content if the process died
+    between the two steps; a crash after the move-aside is healed by
+    ``heal_aside``. A missing ``src`` leaves ``dst`` removed (a bucket can
+    merge to empty: all deletes)."""
+    old = dst + OLD_SUFFIX
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(dst):
+        os.replace(dst, old)
+    if os.path.exists(src):
+        os.replace(src, dst)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def heal_aside(old: str) -> None:
+    """Heal a crash inside ``swap_dir``: an aside (``<dir>.__old__``) whose
+    replacement never landed is restored; one whose replacement DID land
+    is stale and dropped."""
+    live = old[: -len(OLD_SUFFIX)]
+    if os.path.exists(live):
+        shutil.rmtree(old)
+    else:
+        os.replace(old, live)
 
 
 def _recover_buckets(state_path: str) -> None:
-    """Heal a crash inside swap_buckets: a bucket moved aside (.__old__)
-    whose replacement never landed is restored; one whose replacement DID
-    land is stale and dropped. Called before every prior-state read."""
+    """Heal every bucket a crashed swap left aside. Called before every
+    prior-state read."""
     if not os.path.exists(state_path):
         return
     for name in os.listdir(state_path):
-        if not name.endswith(_OLD_SUFFIX):
-            continue
-        old = os.path.join(state_path, name)
-        dst = os.path.join(state_path, name[: -len(_OLD_SUFFIX)])
-        if os.path.exists(dst):
-            shutil.rmtree(old)
-        else:
-            os.replace(old, dst)
+        if name.endswith(OLD_SUFFIX):
+            heal_aside(os.path.join(state_path, name))
+
+
+def has_bucket_dirs(path: str) -> bool:
+    """Whether ``path`` holds any bucket directory. The _N_BUCKETS meta
+    (or a bucket layout that merged to empty) can leave the dir non-empty
+    with no parquet, and spark.read.parquet on that cannot infer a
+    schema."""
+    return os.path.isdir(path) and any(
+        name.startswith(BUCKET_COL + "=") for name in os.listdir(path)
+    )
 
 
 def with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
     return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(*keys), F.lit(n_buckets)))
 
 
-def check_buckets(state_path: str, n_buckets: int) -> None:
+def _check_buckets(state_path: str, n_buckets: int) -> None:
     """Refuse to merge into a state table created with a different bucket
     count — rows would land in the wrong bucket directories and silently
     duplicate keys across buckets."""
@@ -66,11 +109,11 @@ def check_buckets(state_path: str, n_buckets: int) -> None:
 
 
 def pin_batch(df: DataFrame) -> DataFrame:
-    """Pin the bucketed batch (persist) so that touched_buckets's collect
+    """Pin the bucketed batch (persist) so that the touched-bucket collect
     and the later merge/write read it once: otherwise each re-executes the
     full upstream batch transform — 2x the expensive part of the ingest
     hot path (e.g. the shingle->minhash->bands pipeline in the LSH sink).
-    The pin is lazy: the sink's first action, touched_buckets's collect,
+    The pin is lazy: the sink's first action, the touched-bucket collect,
     fills it (a cached relation always materializes every column), so no
     separate count() job runs.
 
@@ -90,21 +133,23 @@ def unpin_batch(df: DataFrame) -> None:
     df.unpersist(blocking=False)
 
 
-def touched_buckets(df: DataFrame) -> list[int]:
-    return [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
-
-
-def read_prior(spark: SparkSession, state_path: str, buckets: list[int]) -> DataFrame | None:
-    """Prior state for the touched buckets only (directory-pruned scan)."""
+def _read_prior(batch: DataFrame, state_path: str, buckets: list[int]) -> DataFrame:
+    """Prior state for the touched buckets only (directory-pruned scan),
+    in the batch's columns; an empty local relation when there is no
+    state yet."""
+    spark = batch.sparkSession
     _recover_buckets(state_path)
-    # look for actual bucket directories: the _N_BUCKETS meta (or an
-    # all-deletes first batch) leaves the dir non-empty with no parquet,
-    # and spark.read.parquet on that cannot infer a schema
-    if not os.path.exists(state_path) or not any(
-        name.startswith(BUCKET_COL + "=") for name in os.listdir(state_path)
-    ):
-        return None
-    return spark.read.parquet(state_path).where(F.col(BUCKET_COL).isin(buckets))
+    if not has_bucket_dirs(state_path):
+        # built on a LocalRelation (VALUES), which the optimizer's first
+        # batches fold to an empty one and prune from a union or anti-join
+        # before any other rule runs, so the plan is the one without the
+        # prior branch. createDataFrame([]) plans as an RDD scan and is
+        # pruned only after FoldablePropagation, which then leaves the
+        # upsert's constant __src tag in its shuffle.
+        nulls = [F.lit(None).cast(f.dataType).alias(f.name) for f in batch.schema]
+        return spark.sql("VALUES (0)").select(*nulls).where(F.lit(False))
+    prior = spark.read.parquet(state_path).where(F.col(BUCKET_COL).isin(buckets))
+    return prior.select(*batch.columns)
 
 
 def cluster_by_bucket(df: DataFrame) -> DataFrame:
@@ -112,49 +157,75 @@ def cluster_by_bucket(df: DataFrame) -> DataFrame:
     one task, so a partitionBy(bucket) write lands one file per bucket.
     Without it every task of the frame writes a file into every touched
     bucket directory it holds rows for, and state fragments into
-    (tasks x buckets) small files that every later read_prior /
+    (tasks x buckets) small files that every later prior-state read /
     read_state pays to open. A merge keyed on (bucket, *keys) over a
     clustered frame needs no exchange of its own, and clustering an
-    already clustered frame again is planned away, so a sink may cluster
-    before its merge and swap_buckets still writes with one exchange."""
+    already clustered frame again is planned away, so a merge may cluster
+    before it returns and the write still runs with one exchange."""
     return df.repartition(F.col(BUCKET_COL))
 
 
-def swap_buckets(
+def write_bucket_dir(df: DataFrame, path: str, n_buckets: int) -> bool:
+    """Write the bucketed frame ``df`` as a bucket layout at ``path``:
+    clustered, ``partitionBy(__bucket)`` (one file per bucket), plus the
+    _N_BUCKETS meta that the merge's bucket-count check reads. Returns
+    whether any bucket directory landed (an empty frame writes none)."""
+    cluster_by_bucket(df).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+    with open(os.path.join(path, _META), "w") as fh:
+        fh.write(str(n_buckets))
+    return has_bucket_dirs(path)
+
+
+def _swap_buckets(
     merged: DataFrame, state_path: str, buckets: list[int], n_buckets: int
 ) -> None:
-    """Write ``merged`` (which covers exactly ``buckets``) clustered and
-    partitioned by bucket, then atomically swap each touched bucket
-    directory into place: one file per touched bucket. Untouched bucket
-    directories are never read or written. Records the bucket count on
-    first write (see ``check_buckets``)."""
+    """Stage ``merged`` (which covers exactly ``buckets``) as a bucket
+    layout, then swap each touched bucket directory into place. Untouched
+    bucket directories are never read or written. The first write also
+    installs the bucket-count meta."""
     tmp = state_path.rstrip("/") + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    cluster_by_bucket(merged).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
+    write_bucket_dir(merged, tmp, n_buckets)
     os.makedirs(state_path, exist_ok=True)
     meta = os.path.join(state_path, _META)
     if not os.path.exists(meta):
-        with open(meta, "w") as fh:
-            fh.write(str(n_buckets))
+        os.replace(os.path.join(tmp, _META), meta)
     for b in buckets:
         part = f"{BUCKET_COL}={b}"
-        src = os.path.join(tmp, part)
-        dst = os.path.join(state_path, part)
-        old = dst + _OLD_SUFFIX
-        # move the live dir ASIDE (atomic rename) before installing the
-        # replacement — rmtree-then-move would lose the bucket's entire
-        # state if the process dies between the two steps. A crash after
-        # the move-aside is healed by _recover_buckets on the next merge.
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(dst):
-            os.replace(dst, old)
-        if os.path.exists(src):  # a bucket can merge to empty (all deletes)
-            os.replace(src, dst)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        swap_dir(os.path.join(tmp, part), os.path.join(state_path, part))
     shutil.rmtree(tmp)
+
+
+def merge_buckets(
+    state_path: str,
+    rows: DataFrame,
+    keys: list[str],
+    n_buckets: int,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> list[int]:
+    """MERGE ``rows`` into the bucketed state at ``state_path``: bucket
+    them on ``keys``, and replace each touched bucket with
+    ``merge(batch, prior)`` (the contract is in the module docstring).
+    Returns the touched buckets; a batch with no rows returns [] before
+    any state is read or written."""
+    _check_buckets(state_path, n_buckets)
+    batch = pin_batch(with_bucket(rows, keys, n_buckets))
+    try:
+        buckets = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
+        if not buckets:
+            return []
+        prior = _read_prior(batch, state_path, buckets)
+        _swap_buckets(merge(batch, prior), state_path, buckets, n_buckets)
+        return buckets
+    finally:
+        unpin_batch(batch)
+
+
+def set_union(cols: list[str]) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """The merge of a state table that is a SET of rows: prior and batch
+    rows deduplicated on ``cols``, so a replayed batch is a no-op."""
+    return lambda batch, prior: prior.unionAll(batch).dropDuplicates(cols)
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -177,6 +248,22 @@ def streaming_query_id(df: DataFrame) -> str:
     return qid or ""
 
 
+def read_marker(state_path: str) -> tuple[str | None, int] | None:
+    """The ``_LAST_BATCH`` marker as (queryId, batch id); queryId is None
+    for a pre-lineage bare-batch-id marker. None when the marker is
+    missing or empty (truncated): read as "nothing merged"."""
+    p = os.path.join(state_path, _LAST_BATCH)
+    if not os.path.exists(p):
+        return None
+    with open(p) as fh:
+        lines = fh.read().splitlines()
+    if not lines:
+        return None
+    if len(lines) == 1:
+        return None, int(lines[0].strip())
+    return lines[0], int(lines[1].strip())
+
+
 def last_merged_batch(state_path: str, query_id: str = "") -> int:
     """Highest micro-batch id already merged into this state by the SAME
     streaming query lineage (-1 = none). Used by NON-idempotent merges
@@ -192,14 +279,11 @@ def last_merged_batch(state_path: str, query_id: str = "") -> int:
     dead lineage already folded in, so pair a fresh checkpoint with a
     fresh state dir; this marker makes that mistake loud in tests instead
     of silent."""
-    p = os.path.join(state_path, _LAST_BATCH)
-    if not os.path.exists(p):
+    marker = read_marker(state_path)
+    if marker is None:
         return -1
-    with open(p) as fh:
-        lines = fh.read().splitlines()
-    if not lines:
-        return -1  # truncated/empty marker: safe "nothing merged"
-    if len(lines) == 1:
+    recorded_qid, batch = marker
+    if recorded_qid is None:
         # pre-lineage bare-batch-id marker. Honor it only for callers that
         # ALSO have no lineage (direct batch invocations, query_id "") —
         # the symmetric legacy semantic. For a streaming lineage it reads
@@ -208,8 +292,7 @@ def last_merged_batch(state_path: str, query_id: str = "") -> int:
         # double-count only if the SAME pre-upgrade checkpoint redelivers
         # its last batch across the code upgrade — pair upgrades with a
         # state-dir + checkpoint reset to exclude that window entirely.
-        return int(lines[0].strip()) if query_id == "" else -1
-    recorded_qid, batch = lines[0], int(lines[1].strip())
+        return batch if query_id == "" else -1
     return batch if recorded_qid == query_id else -1
 
 
@@ -219,7 +302,9 @@ def record_merged_batch(state_path: str, batch_id: int, query_id: str = "") -> N
     swaps but before this marker — still double-merges those buckets on
     replay; closing it needs a transactional table format (Delta/Iceberg
     MERGE), which is what this sink becomes in production (module
-    docstring)."""
+    docstring). Creates the state dir: a batch with no rows writes no
+    bucket, yet its id is still recorded."""
+    os.makedirs(state_path, exist_ok=True)
     p = os.path.join(state_path, _LAST_BATCH)
     tmp = p + ".__tmp__"
     with open(tmp, "w") as fh:

@@ -28,16 +28,7 @@ from gmall_flink_spark.llm.dedup import (
     jaccard_pairs,
     prefix_filter_candidates,
 )
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    read_prior,
-    read_state,
-    swap_buckets,
-    touched_buckets,
-    unpin_batch,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state, set_union
 
 __all__ = [
     "units_index_merge",
@@ -49,22 +40,8 @@ __all__ = [
 
 def units_index_merge(state_path: str, batch_df: DataFrame, n_buckets: int = 16) -> None:
     """Merge one micro-batch of (doc_id, text) docs into the unit index."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
     units = distinct_tokens(batch_df, spread_input=False)
-    batch = pin_batch(with_bucket(units, ["shingle"], n_buckets))
-    try:
-        buckets = touched_buckets(batch)
-        prior = read_prior(spark, state_path, buckets)
-        merged = batch if prior is None else prior.select(*batch.columns).unionAll(batch)
-        swap_buckets(
-            merged.dropDuplicates(["doc_id", "shingle"]),
-            state_path,
-            buckets,
-            n_buckets,
-        )
-    finally:
-        unpin_batch(batch)
+    merge_buckets(state_path, units, ["shingle"], n_buckets, set_union(["doc_id", "shingle"]))
 
 
 def units_index_writer(state_path: str, n_buckets: int = 16):

@@ -17,16 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gmall_flink_spark.operators.dedup import keep_first
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    unpin_batch,
-    read_prior,
-    read_state,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state
 
 __all__ = ["dedup_append", "dedup_writer", "read_state"]
 
@@ -40,25 +31,17 @@ def dedup_append(
 ) -> None:
     """Append the batch rows whose fingerprint was never seen before; the
     first arrival (by ``order_by``) owns the fingerprint forever."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
-    compacted = pin_batch(with_bucket(
-        keep_first(batch_df, [fingerprint_col], order_by), [fingerprint_col], n_buckets
-    ))
-    try:
-        buckets = touched_buckets(compacted)
-        prior = read_prior(spark, state_path, buckets)
-        fresh = compacted
-        if prior is not None:
-            fresh = compacted.join(
-                prior.select(F.col(fingerprint_col).alias("__seen")),
-                compacted[fingerprint_col] == F.col("__seen"),
-                "left_anti",
-            )
-        merged = fresh if prior is None else prior.select(*fresh.columns).unionAll(fresh)
-        swap_buckets(merged, state_path, buckets, n_buckets)
-    finally:
-        unpin_batch(compacted)
+
+    def append_unseen(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        fresh = batch.join(
+            prior.select(F.col(fingerprint_col).alias("__seen")),
+            batch[fingerprint_col] == F.col("__seen"),
+            "left_anti",
+        )
+        return prior.unionAll(fresh)
+
+    compacted = keep_first(batch_df, [fingerprint_col], order_by)
+    merge_buckets(state_path, compacted, [fingerprint_col], n_buckets, append_unseen)
 
 
 def dedup_writer(

@@ -17,21 +17,23 @@ bucketed-state maintenance.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gmall_flink_spark.llm.similarity import ivf_assign
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    unpin_batch,
-    read_prior,
-    read_state,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state
 
 __all__ = ["ivf_index_merge", "ivf_index_writer", "ivf_index_assignments"]
+
+
+def batch_wins_on_vec_id(batch: DataFrame, prior: DataFrame) -> DataFrame:
+    """The IVF and IVF-PQ index merge: a deterministic winner WITHIN the
+    touched buckets — the BATCH row survives a vec_id collision (prior
+    rows anti-joined out). NB a contract-violating changed vector whose
+    CLUSTER changed leaves its stale row in the old (untouched) bucket —
+    removing that needs the upsert-by-key sink, per ``ivf_index_merge``'s
+    contract. Within-batch duplicates remain arbitrary-but-equal under
+    the immutable-id contract."""
+    stale = prior.join(batch.select("vec_id"), "vec_id", "left_anti")
+    return batch.unionAll(stale).dropDuplicates(["vec_id"])
 
 
 def ivf_index_merge(
@@ -47,30 +49,8 @@ def ivf_index_merge(
     set-merge dedups it). A *changed* vector for an existing id would need
     a delete in its old cluster bucket first — that's a different sink
     contract (upsert by key), covered by ``sinks/upsert.py``."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
     assigned = ivf_assign(batch_df, centroids).select("vec_id", "cluster")
-    batch = pin_batch(with_bucket(assigned, ["cluster"], n_buckets))
-    try:
-        buckets = touched_buckets(batch)
-        prior = read_prior(spark, state_path, buckets)
-        # deterministic winner WITHIN the touched buckets: the BATCH row
-        # survives a vec_id collision (prior rows anti-joined out). NB a
-        # contract-violating changed vector whose CLUSTER changed leaves
-        # its stale row in the old (untouched) bucket — removing that
-        # needs the upsert-by-key sink, per the docstring contract above.
-        # Within-batch duplicates remain arbitrary-but-equal under the
-        # immutable-id contract.
-        merged = batch if prior is None else batch.unionAll(
-            prior.select(*batch.columns).join(
-                batch.select("vec_id"), "vec_id", "left_anti"
-            )
-        )
-        swap_buckets(
-            merged.dropDuplicates(["vec_id"]), state_path, buckets, n_buckets
-        )
-    finally:
-        unpin_batch(batch)
+    merge_buckets(state_path, assigned, ["cluster"], n_buckets, batch_wins_on_vec_id)
 
 
 def ivf_index_writer(state_path: str, centroids: DataFrame, n_buckets: int = 16):

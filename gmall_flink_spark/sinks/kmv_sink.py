@@ -15,15 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmall_flink_spark.operators.sketch import KMV_K, kmv_estimate, kmv_hash
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    unpin_batch,
-    read_prior,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state
 
 __all__ = ["kmv_merge", "kmv_writer", "kmv_estimates"]
 
@@ -36,29 +28,19 @@ def kmv_merge(
     n_buckets: int = 16,
 ) -> None:
     """Merge one micro-batch into the per-group k-minimum-hash state."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
-    batch = pin_batch(
-        with_bucket(
-            batch_df.select(group, kmv_hash(F.col(key)).alias("h")).distinct(),
-            [group],
-            n_buckets,
-        )
-    )
-    try:
-        buckets = touched_buckets(batch)
-        prior = read_prior(spark, state_path, buckets)
-        merged = batch if prior is None else prior.select(*batch.columns).unionAll(batch)
+
+    def k_min(batch: DataFrame, prior: DataFrame) -> DataFrame:
         w = Window.partitionBy(group).orderBy("h")
-        kept = (
-            merged.dropDuplicates([group, "h"])
+        return (
+            prior.unionAll(batch)
+            .dropDuplicates([group, "h"])
             .withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") <= KMV_K)
             .drop("rk")
         )
-        swap_buckets(kept, state_path, buckets, n_buckets)
-    finally:
-        unpin_batch(batch)
+
+    hashes = batch_df.select(group, kmv_hash(F.col(key)).alias("h")).distinct()
+    merge_buckets(state_path, hashes, [group], n_buckets, k_min)
 
 
 def kmv_writer(state_path: str, group: str, key: str, n_buckets: int = 16):
@@ -73,8 +55,6 @@ def kmv_writer(state_path: str, group: str, key: str, n_buckets: int = 16):
 def kmv_estimates(spark: SparkSession, state_path: str, group: str) -> DataFrame:
     """Distinct-count estimates from the accumulated sketch state: one row
     per group with (n_stored, h_k) folded through the shared estimator."""
-    from gmall_flink_spark.sinks._bucketed import read_state
-
     w = Window.partitionBy(group).orderBy("h")
     return (
         read_state(spark, state_path)

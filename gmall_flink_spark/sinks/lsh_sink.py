@@ -27,16 +27,7 @@ from gmall_flink_spark.llm.dedup import (
     lsh_candidates,
     minhash_signatures,
 )
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    unpin_batch,
-    read_prior,
-    read_state,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state, set_union
 
 __all__ = ["lsh_index_merge", "lsh_index_writer", "lsh_state_candidates"]
 
@@ -49,27 +40,14 @@ def lsh_index_merge(
     n_buckets: int = 16,
 ) -> None:
     """Merge one micro-batch of (doc_id, text) docs into the band index."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
     # spread_input=False: a micro-batch is small by construction, and an
     # exchange per batch adds latency for no parallelism gain
     bands = lsh_bands(
         minhash_signatures(distinct_tokens(batch_df, spread_input=False), k=k),
         rows_per_band,
     )
-    batch = pin_batch(with_bucket(bands, ["band", "band_sig"], n_buckets))
-    try:
-        buckets = touched_buckets(batch)
-        prior = read_prior(spark, state_path, buckets)
-        merged = batch if prior is None else prior.select(*batch.columns).unionAll(batch)
-        swap_buckets(
-            merged.dropDuplicates(["band", "band_sig", "doc_id"]),
-            state_path,
-            buckets,
-            n_buckets,
-        )
-    finally:
-        unpin_batch(batch)
+    key = ["band", "band_sig"]
+    merge_buckets(state_path, bands, key, n_buckets, set_union([*key, "doc_id"]))
 
 
 def lsh_index_writer(

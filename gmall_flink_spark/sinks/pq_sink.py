@@ -22,16 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_spark.llm.similarity import ivf_assign, pq_encode
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    read_prior,
-    read_state,
-    swap_buckets,
-    touched_buckets,
-    unpin_batch,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state
+from gmall_flink_spark.sinks.ivf_sink import batch_wins_on_vec_id
 
 __all__ = [
     "ivfpq_index_merge",
@@ -70,27 +62,9 @@ def ivfpq_index_merge(
     re-delivered id re-encodes to the identical (cluster, codes) row and
     the set-merge dedups it; a *changed* vector would need an upsert-by-key
     sink (sinks/upsert.py) to delete from its old cluster bucket."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
     assigned = ivf_assign(batch_df, centroids).select("vec_id", "cluster")
     packed = assigned.join(_packed_codes(batch_df, books, m, d_sub), "vec_id")
-    batch = pin_batch(with_bucket(packed, ["cluster"], n_buckets))
-    try:
-        buckets = touched_buckets(batch)
-        prior = read_prior(spark, state_path, buckets)
-        # deterministic winner within touched buckets: batch beats prior
-        # on a vec_id collision (see ivf_sink.ivf_index_merge — same
-        # contract incl. the changed-cluster caveat)
-        merged = batch if prior is None else batch.unionAll(
-            prior.select(*batch.columns).join(
-                batch.select("vec_id"), "vec_id", "left_anti"
-            )
-        )
-        swap_buckets(
-            merged.dropDuplicates(["vec_id"]), state_path, buckets, n_buckets
-        )
-    finally:
-        unpin_batch(batch)
+    merge_buckets(state_path, packed, ["cluster"], n_buckets, batch_wins_on_vec_id)
 
 
 def ivfpq_index_writer(

@@ -21,17 +21,11 @@ from pyspark.sql import functions as F
 
 from gmall_flink_spark.sinks._bucketed import (
     BUCKET_COL,
-    check_buckets,
     last_merged_batch,
-    pin_batch,
-    unpin_batch,
-    read_prior,
+    merge_buckets,
     read_state,
     record_merged_batch,
     streaming_query_id,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
 )
 
 __all__ = ["merge_rollup", "rollup_writer", "read_state"]
@@ -46,7 +40,6 @@ def merge_rollup(
     """Merge one batch's partial aggregate into the rollup table. Partial
     columns are matched to merge functions by suffix: *_ct/_sum -> sum,
     *_min -> min, *_max -> max."""
-    spark = batch_partial.sparkSession
     vals = [c for c in batch_partial.columns if c not in keys]
     aggs = []
     for c in vals:
@@ -54,18 +47,11 @@ def merge_rollup(
         if fn is None:
             raise ValueError(f"column {c!r} has no mergeable suffix (_ct/_sum/_min/_max)")
         aggs.append(fn(c).alias(c))
-    check_buckets(state_path, n_buckets)
-    partial = pin_batch(with_bucket(batch_partial, keys, n_buckets))
-    try:
-        buckets = touched_buckets(partial)
-        merged = partial
-        prior = read_prior(spark, state_path, buckets)
-        if prior is not None:
-            merged = prior.select(*partial.columns).unionAll(partial)
-        out = merged.groupBy(*keys, BUCKET_COL).agg(*aggs)
-        swap_buckets(out, state_path, buckets, n_buckets)
-    finally:
-        unpin_batch(partial)
+
+    def fold_partials(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        return prior.unionAll(batch).groupBy(*keys, BUCKET_COL).agg(*aggs)
+
+    merge_buckets(state_path, batch_partial, keys, n_buckets, fold_partials)
 
 
 def rollup_writer(state_path: str, keys: list[str], agg_fn, n_buckets: int = 16):

@@ -16,16 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from gmall_flink_spark.operators.scd2 import scd2_versions
-from gmall_flink_spark.sinks._bucketed import (
-    check_buckets,
-    pin_batch,
-    unpin_batch,
-    read_prior,
-    read_state,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
-)
+from gmall_flink_spark.sinks._bucketed import merge_buckets, read_state
 
 __all__ = ["scd2_merge", "scd2_writer", "read_state"]
 
@@ -43,21 +34,13 @@ def scd2_merge(
     ``batch_df`` carries the raw changelog columns (key + order cols +
     attributes); ``ver``/``valid_to`` are derived here and never trusted
     from the input."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
+
+    def reversion(batch: DataFrame, prior: DataFrame) -> DataFrame:
+        merged_raw = prior.unionAll(batch).dropDuplicates([key, *order_cols])
+        return scd2_versions(merged_raw, key, order_cols, from_col)
+
     raw_cols = [c for c in batch_df.columns if c not in ("ver", "valid_to")]
-    batch = pin_batch(with_bucket(batch_df.select(*raw_cols), [key], n_buckets))
-    try:
-        buckets = touched_buckets(batch)
-        prior = read_prior(spark, state_path, buckets)
-        merged_raw = batch
-        if prior is not None:
-            merged_raw = prior.select(*batch.columns).unionAll(batch)
-        merged_raw = merged_raw.dropDuplicates([key, *order_cols])
-        versioned = scd2_versions(merged_raw, key, order_cols, from_col)
-        swap_buckets(versioned, state_path, buckets, n_buckets)
-    finally:
-        unpin_batch(batch)
+    merge_buckets(state_path, batch_df.select(*raw_cols), [key], n_buckets, reversion)
 
 
 def scd2_writer(

@@ -25,15 +25,13 @@ from pyspark.sql import functions as F
 from gmall_flink_spark.operators.dedup import keep_last
 from gmall_flink_spark.sinks._bucketed import (
     BUCKET_COL,
-    check_buckets,
+    OLD_SUFFIX,
     cluster_by_bucket,
-    pin_batch,
-    unpin_batch,
-    read_prior,
+    heal_aside,
+    merge_buckets,
+    read_marker,
     read_state,
-    swap_buckets,
-    touched_buckets,
-    with_bucket,
+    swap_dir,
 )
 
 __all__ = [
@@ -59,23 +57,19 @@ def upsert_into(
 
     One hash exchange, on the bucket column: keep_last keyed on (bucket,
     *keys) runs within that clustering (bucket is a function of the keys,
-    so the result is keep_last on keys), and swap_buckets's write reuses
+    so the result is keep_last on keys), and the bucketed write reuses
     it. The batch needs no compaction pass of its own."""
-    spark = batch_df.sparkSession
-    check_buckets(state_path, n_buckets)
-    batch = pin_batch(with_bucket(batch_df, keys, n_buckets))
-    try:
-        buckets = touched_buckets(batch)
+
+    def keep_last_version(batch: DataFrame, prior: DataFrame) -> DataFrame:
         # a batch row beats a prior row at an equal version (__src tiebreak):
         # a re-put of the same version overwrites, like an HBase put.
-        merged = batch.withColumn("__src", F.lit(1))
-        prior = read_prior(spark, state_path, buckets)
-        if prior is not None:
-            merged = prior.select(*batch.columns).withColumn("__src", F.lit(0)).unionAll(merged)
+        merged = prior.withColumn("__src", F.lit(0)).unionAll(
+            batch.withColumn("__src", F.lit(1))
+        )
         kept = keep_last(cluster_by_bucket(merged), [BUCKET_COL, *keys], [*order_by, "__src"])
-        swap_buckets(kept.drop("__src"), state_path, buckets, n_buckets)
-    finally:
-        unpin_batch(batch)
+        return kept.drop("__src")
+
+    merge_buckets(state_path, batch_df, keys, n_buckets, keep_last_version)
 
 
 def upsert_writer(state_path: str, keys: list[str], order_by: list[str], n_buckets: int = 16):
@@ -105,12 +99,8 @@ def _heal_topic_asides(base_path: str, topic_col: str) -> None:
         return
     for d in sorted(os.listdir(base_path)):
         p = os.path.join(base_path, d)
-        if d.startswith(f"{topic_col}=") and d.endswith(".__old__"):
-            live = os.path.join(base_path, d[: -len(".__old__")])
-            if os.path.exists(live):
-                shutil.rmtree(p)
-            else:
-                os.replace(p, live)
+        if d.startswith(f"{topic_col}=") and d.endswith(OLD_SUFFIX):
+            heal_aside(p)
         elif d.startswith(("__stage_", "__compact_read_", "__compact_stage_")):
             shutil.rmtree(p, ignore_errors=True)
 
@@ -230,28 +220,20 @@ def compact_topics(
     scrub its tags — and skipping them would freeze every pre-reset file
     out of compaction forever.
 
-    Crash-safe like swap_buckets: stage a full replacement directory
-    (compacted file + passthrough links), move the live topic dir aside,
-    install, drop the aside copy; a crash between the two renames is
-    healed on the next call (aside dir present + live missing -> restore),
-    and orphaned staging directories from crashed runs are swept.
+    Crash-safe like the bucket swap of the MERGE sinks: stage a full
+    replacement directory (compacted file + passthrough links) and install
+    it with ``_bucketed.swap_dir``; a crash between its two renames is
+    healed on the next call (``heal_aside``), and orphaned staging
+    directories from crashed runs are swept.
     Returns {topic: (files_before, files_after)} for the rewritten topics.
     """
     import os
     import shutil
     import uuid as _uuid
 
-    from gmall_flink_spark.sinks._bucketed import _LAST_BATCH
-
-    lineage, hi, have_marker = "nolineage", -1, False
-    marker = os.path.join(base_path, _LAST_BATCH)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            lines = fh.read().splitlines()
-        if len(lines) >= 2:
-            lineage, hi, have_marker = (lines[0] or "nolineage"), int(lines[1]), True
-        elif len(lines) == 1:
-            hi, have_marker = int(lines[0]), True
+    marker = read_marker(base_path)
+    have_marker = marker is not None
+    lineage, hi = ("nolineage", -1) if marker is None else (marker[0] or "nolineage", marker[1])
 
     def published(name: str) -> bool:
         if name.startswith("compact-"):
@@ -293,10 +275,9 @@ def compact_topics(
 
     stats: dict[str, tuple[int, int]] = {}
     for d in sorted(os.listdir(base_path)):
-        if not d.startswith(f"{topic_col}=") or d.endswith(".__old__"):
+        if not d.startswith(f"{topic_col}=") or d.endswith(OLD_SUFFIX):
             continue
         tdir = os.path.join(base_path, d)
-        old = tdir + ".__old__"
         files = sorted(n for n in os.listdir(tdir) if n.endswith(".parquet"))
         if len(files) <= max_files:
             continue
@@ -321,9 +302,7 @@ def compact_topics(
         for n in files:
             if n not in elig:
                 os.link(os.path.join(tdir, n), os.path.join(stage, n))
-        os.replace(tdir, old)
-        os.replace(stage, tdir)
-        shutil.rmtree(old)
+        swap_dir(stage, tdir)
         stats[d] = (len(files), len(files) - len(elig) + 1)
     return stats
 

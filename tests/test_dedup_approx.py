@@ -240,26 +240,22 @@ def test_merge_components_artifact_equals_rebuild(spark, tmp_path):
     edges into a persisted v1 mapping table in place; the table must then
     equal the full rebuild, and UNTOUCHED doc_id buckets must not be
     rewritten (the per-delta I/O contract)."""
-    import os
-
     from gmall_flink_spark.llm.dedup import connected_components
     from gmall_flink_spark.queries.llm_dedup import (
         COMPONENTS_N_BUCKETS,
         _verified_pairs,
         merge_components_artifact,
     )
-    from gmall_flink_spark.sinks._bucketed import read_state, with_bucket
+    from gmall_flink_spark.sinks._bucketed import read_state, with_bucket, write_bucket_dir
     from pyspark.sql import functions as F
 
     pairs = _verified_pairs(spark, SF_ORACLE).select("doc_a", "doc_b")
     is_delta = (F.col("doc_a") % 5 == 0) | (F.col("doc_b") % 5 == 0)
     path = str(tmp_path / "components_v1")
     mapping1 = connected_components(pairs.where(~is_delta))
-    with_bucket(mapping1, ["doc_id"], COMPONENTS_N_BUCKETS).write.partitionBy(
-        "__bucket"
-    ).parquet(path)
-    with open(os.path.join(path, "_N_BUCKETS"), "w") as fh:
-        fh.write(str(COMPONENTS_N_BUCKETS))
+    write_bucket_dir(
+        with_bucket(mapping1, ["doc_id"], COMPONENTS_N_BUCKETS), path, COMPONENTS_N_BUCKETS
+    )
 
     merge_components_artifact(spark, path, pairs.where(is_delta))
     rebuilt = connected_components(pairs)
@@ -277,7 +273,12 @@ def test_merge_components_artifact_rewrites_touched_buckets_only(spark, tmp_path
     import time
 
     from gmall_flink_spark.queries.llm_dedup import merge_components_artifact
-    from gmall_flink_spark.sinks._bucketed import read_state, with_bucket
+    from gmall_flink_spark.sinks._bucketed import (
+        BUCKET_COL,
+        read_state,
+        with_bucket,
+        write_bucket_dir,
+    )
 
     n_buckets = 16
     path = str(tmp_path / "components_small")
@@ -287,16 +288,12 @@ def test_merge_components_artifact_rewrites_touched_buckets_only(spark, tmp_path
         + [(i, i) for i in range(0, 40, 2)],
         "doc_id bigint, component bigint",
     )
-    with_bucket(mapping, ["doc_id"], n_buckets).write.partitionBy(
-        "__bucket"
-    ).parquet(path)
-    with open(os.path.join(path, "_N_BUCKETS"), "w") as fh:
-        fh.write(str(n_buckets))
+    write_bucket_dir(with_bucket(mapping, ["doc_id"], n_buckets), path, n_buckets)
     time.sleep(0.05)
     before = {
         d: os.path.getmtime(os.path.join(path, d))
         for d in os.listdir(path)
-        if d.startswith("__bucket=")
+        if d.startswith(f"{BUCKET_COL}=")
     }
     # one new doc joins one existing cluster: <= 2 changed/new rows
     delta = spark.createDataFrame([(100, 0)], "doc_a bigint, doc_b bigint")
@@ -306,7 +303,7 @@ def test_merge_components_artifact_rewrites_touched_buckets_only(spark, tmp_path
     after = {
         d: os.path.getmtime(os.path.join(path, d))
         for d in os.listdir(path)
-        if d.startswith("__bucket=")
+        if d.startswith(f"{BUCKET_COL}=")
     }
     touched = [d for d in after if before.get(d) != after[d]]
     untouched = [d for d in before if before[d] == after.get(d)]

@@ -258,3 +258,29 @@ def test_no_hand_rolled_session_memos():
         if str(rel) != "sources/tables.py" and "applicationId" in text:
             offenders.append(f"{rel}: keys on applicationId outside session_stage")
     assert not offenders, offenders
+
+
+def test_no_hand_rolled_bucket_merge():
+    """Static guard behind sinks._bucketed.merge_buckets: the bucketed MERGE
+    protocol (bucket-count check, touched buckets, prior read, swap) and
+    the on-disk layout (the bucket-count meta, the bucket directory
+    names) live in that module only. A sink that re-spells any of them
+    is a hand-rolled copy of the protocol, so it fails here."""
+    import pathlib
+    import re
+
+    import gmall_flink_spark
+
+    pkg_root = pathlib.Path(gmall_flink_spark.__file__).parent
+    pattern = re.compile(
+        r"\b(swap_buckets|read_prior|touched_buckets|check_buckets)\s*\("
+        r"|\"_N_BUCKETS\"|\"__bucket=\""
+    )
+    offenders = []
+    for path in sorted(pkg_root.rglob("*.py")):
+        rel = path.relative_to(pkg_root)
+        if str(rel) == "sinks/_bucketed.py":
+            continue
+        for m in pattern.finditer(path.read_text()):
+            offenders.append(f"{rel}: {m.group(0)}")
+    assert not offenders, offenders

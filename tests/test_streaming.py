@@ -1619,9 +1619,10 @@ def test_rollup_replay_of_merged_batch_is_noop(spark):
 
 
 def test_bucketed_state_survives_empty_first_batch(spark):
-    """An empty first micro-batch leaves the state dir holding only the
-    _N_BUCKETS meta; the next batch's prior-state read must treat that as
-    empty instead of crashing schema inference on a parquet-less dir."""
+    """An empty first micro-batch writes no bucket, so the state dir holds
+    only the rollup writer's _LAST_BATCH marker; the next batch's
+    prior-state read must treat that as empty instead of crashing schema
+    inference on a parquet-less dir."""
     from gmall_flink_spark.sinks.rollup import read_state, rollup_writer
 
     state = os.path.join(TMP, "rollup_empty_first")
@@ -1638,6 +1639,139 @@ def test_bucketed_state_survives_empty_first_batch(spark):
     write(empty, 0)
     write(df, 1)
     assert rows(read_state(spark, state)) == [("a", 3)]
+
+
+def test_empty_batch_runs_no_write_job(spark, tmp_path):
+    """A batch with no rows touches no bucket: upsert_into and a rollup
+    writer run only the touched-bucket collect, never a write job for an
+    empty staging dir, and create no bucket state (the rollup writer
+    still records the batch id)."""
+    from gmall_flink_spark.sinks.rollup import rollup_writer
+    from gmall_flink_spark.sinks.upsert import upsert_into
+
+    empty = spark.createDataFrame([], "k string, v int, ts bigint")
+    sc = spark.sparkContext
+
+    def jobs(group, merge):
+        sc.setJobGroup(group, "empty batch into a bucketed sink")
+        try:
+            merge()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    upsert_state = str(tmp_path / "upsert")
+    assert jobs("empty_upsert", lambda: upsert_into(upsert_state, empty, ["k"], ["ts"])) == 1
+    assert not os.path.exists(upsert_state)
+
+    rollup_state = str(tmp_path / "rollup")
+    # a per-row partial (no groupBy): the collect is then a single job
+    write = rollup_writer(
+        rollup_state, ["k"], lambda d: d.select("k", F.col("v").cast("bigint").alias("v_sum"))
+    )
+    assert jobs("empty_rollup", lambda: write(empty, 0)) == 1
+    assert os.listdir(rollup_state) == ["_LAST_BATCH"]
+
+
+def _bucketed_merge_cases():
+    """name -> (merge(spark, state_path, rows_df), schema, rows(batch_no))
+    for every bucketed MERGE sink, on a few literal rows. Batch 1 rows
+    sort after batch 0 rows wherever the merge keeps a first arrival."""
+    from gmall_flink_spark.llm.similarity import pq_train
+    from gmall_flink_spark.queries.llm_dedup import merge_components_artifact
+    from gmall_flink_spark.sinks.allpairs_sink import units_index_merge
+    from gmall_flink_spark.sinks.dedup_sink import dedup_append
+    from gmall_flink_spark.sinks.ivf_sink import ivf_index_merge
+    from gmall_flink_spark.sinks.kmv_sink import kmv_merge
+    from gmall_flink_spark.sinks.lsh_sink import lsh_index_merge
+    from gmall_flink_spark.sinks.pq_sink import ivfpq_index_merge
+    from gmall_flink_spark.sinks.rollup import merge_rollup
+    from gmall_flink_spark.sinks.scd2 import scd2_merge
+    from gmall_flink_spark.sinks.upsert import upsert_into
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu".split()
+    vec = "vec_id bigint, vec array<double>"
+
+    def text(i):
+        return " ".join(words[(i + j) % len(words)] for j in range(8))
+
+    def vectors(b):
+        return [(i, [float(i % 3), 1.0, float(i % 5), 2.0 - i % 2]) for i in range(b * 6, b * 6 + 6)]
+
+    def centroids(spark):
+        return spark.createDataFrame([(0, [1.0, 0.0, 0.0, 1.0]), (1, [0.0, 1.0, 1.0, 0.0])], vec)
+
+    def ivfpq(spark, path, df):
+        books = pq_train(spark.createDataFrame(vectors(0) + vectors(1), vec), 2, 2, 2)
+        ivfpq_index_merge(path, df, centroids(spark), books, 2, 2, n_buckets=4)
+
+    return {
+        "upsert": (
+            lambda spark, path, df: upsert_into(path, df, ["k"], ["ts"], n_buckets=4),
+            "k bigint, ts bigint, v string",
+            lambda b: [(b * 3 + i, b, f"v{b}{i}") for i in range(6)],
+        ),
+        "rollup": (
+            lambda spark, path, df: merge_rollup(path, df, ["k"], n_buckets=4),
+            "k string, v_ct bigint, v_sum bigint, v_min bigint, v_max bigint",
+            lambda b: [(f"k{(b + i) % 7}", 1, i, b + i, b * i) for i in range(6)],
+        ),
+        "kmv": (
+            lambda spark, path, df: kmv_merge(path, df, "g", "u", n_buckets=4),
+            "g string, u bigint",
+            lambda b: [(f"g{i % 3}", b * 5 + i) for i in range(9)],
+        ),
+        "dedup": (
+            lambda spark, path, df: dedup_append(path, df, "fp", ["doc_id"], n_buckets=4),
+            "doc_id bigint, fp string",
+            lambda b: [(b * 10 + i, f"f{(b + i) % 7}") for i in range(6)],
+        ),
+        "scd2": (
+            lambda spark, path, df: scd2_merge(path, df, "sku_id", ["ts", "id"], "ts", n_buckets=4),
+            "sku_id bigint, id bigint, sku_num bigint, ts bigint",
+            lambda b: [(i % 3, b * 10 + i, i, b * 100 + i) for i in range(6)],
+        ),
+        "lsh": (
+            lambda spark, path, df: lsh_index_merge(path, df, n_buckets=4),
+            "doc_id bigint, text string",
+            lambda b: [(b * 10 + i, text(b + i)) for i in range(4)],
+        ),
+        "allpairs": (
+            lambda spark, path, df: units_index_merge(path, df, n_buckets=4),
+            "doc_id bigint, text string",
+            lambda b: [(b * 10 + i, text(b + i)) for i in range(4)],
+        ),
+        "ivf": (
+            lambda spark, path, df: ivf_index_merge(path, df, centroids(spark), n_buckets=4),
+            vec,
+            vectors,
+        ),
+        "ivfpq": (ivfpq, vec, vectors),
+        "components": (
+            lambda spark, path, df: merge_components_artifact(spark, path, df, n_buckets=4),
+            "doc_a bigint, doc_b bigint",
+            lambda b: [(b * 4 + i, b * 4 + i + 1) for i in range(3)],
+        ),
+    }
+
+
+@pytest.mark.parametrize("sink", list(_bucketed_merge_cases()))
+def test_bucketed_merge_is_batching_invariant(spark, tmp_path, sink):
+    """The merge contract every bucketed sink keeps: merging batch 0 then
+    batch 1 leaves the same state as merging their union once (the first
+    merge runs on an empty prior, the second on existing state)."""
+    from gmall_flink_spark.sinks._bucketed import read_state
+
+    merge, schema, make_rows = _bucketed_merge_cases()[sink]
+    b0, b1 = make_rows(0), make_rows(1)
+    stepwise, once = str(tmp_path / "stepwise"), str(tmp_path / "once")
+    merge(spark, stepwise, spark.createDataFrame(b0, schema))
+    merge(spark, stepwise, spark.createDataFrame(b1, schema))
+    merge(spark, once, spark.createDataFrame(b0 + b1, schema))
+    got, want = read_state(spark, stepwise), read_state(spark, once)
+    assert got.count() > 0
+    assert rows(got) == rows(want)
 
 
 def test_bucket_swap_crash_recovery(spark):
