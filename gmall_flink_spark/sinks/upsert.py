@@ -66,7 +66,8 @@ def upsert_into(
         merged = prior.withColumn("__src", F.lit(0)).unionAll(
             batch.withColumn("__src", F.lit(1))
         )
-        kept = keep_last(cluster_by_bucket(merged), [BUCKET_COL, *keys], [*order_by, "__src"])
+        clustered = cluster_by_bucket(merged, n_buckets)
+        kept = keep_last(clustered, [BUCKET_COL, *keys], [*order_by, "__src"])
         return kept.drop("__src")
 
     merge_buckets(state_path, batch_df, keys, n_buckets, keep_last_version)

@@ -284,3 +284,38 @@ def test_no_hand_rolled_bucket_merge():
         for m in pattern.finditer(path.read_text()):
             offenders.append(f"{rel}: {m.group(0)}")
     assert not offenders, offenders
+
+
+def test_bucketed_reads_pass_a_schema():
+    """Static guard behind the recorded ``_SCHEMA``: every parquet read in
+    sinks/_bucketed.py passes the state's schema, so a merge or a
+    read_state runs no footer-inference job. The one exception is
+    ``_state_schema``'s inference for a state dir written before schemas
+    were recorded."""
+    import ast
+    import pathlib
+
+    import gmall_flink_spark
+
+    src = pathlib.Path(gmall_flink_spark.__file__).parent / "sinks" / "_bucketed.py"
+    tree = ast.parse(src.read_text())
+
+    def chain(node):
+        """The attribute names of a call chain, outermost last."""
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return names[::-1]
+
+    inferring = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                names = chain(node.func)
+                if names[-1] == "parquet" and "read" in names and "schema" not in names:
+                    inferring.append(fn.name)
+    assert inferring == ["_state_schema"], inferring

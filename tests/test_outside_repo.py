@@ -5,7 +5,9 @@ Python workers then cannot import it, so every function a worker calls
 must reach them by value (``gmall_flink_spark/__init__.py``). pytest runs
 from the repo root, where the workers can import the package, which hides
 a by-reference function; this test runs a child driver from ``tmp_path``
-instead.
+instead. The child also checks that its workers run under the
+package's worker daemon (``gmall_flink_spark/_worker``) and still
+cannot import the package.
 
 Process hygiene: the child stops its session in a ``finally``; the parent
 starts it in a new session, kills whatever of that session is still
@@ -85,8 +87,24 @@ def media():
             assert (r["decoder"], r["byte_len"]) == ("stub", mid % 100 + 1), mid
 
 
+def daemon():
+    def probe(_):
+        import sys
+
+        try:
+            import gmall_flink_spark  # noqa: F401
+
+            importable = True
+        except ImportError:
+            importable = False
+        yield sys.modules["__main__"].__spec__.name, importable
+
+    got = set(spark.sparkContext.parallelize(range(2), 2).mapPartitions(probe).collect())
+    assert got == {("gmall_daemon", False)}, got
+
+
 try:
-    for part in (stream, media):
+    for part in (stream, media, daemon):
         try:
             part()
             print(f"{part.__name__}: ok", flush=True)
@@ -153,8 +171,8 @@ def test_stream_and_codecs_run_outside_the_repo(tmp_path):
     finally:
         _end_session(proc.pid, grace_s=20)
     assert not _session_pids(proc.pid), "a process outlived the child driver"
-    report = [ln for ln in out.splitlines() if ln.startswith(("stream:", "media:"))]
-    assert report == ["stream: ok", "media: ok"], (
+    report = [ln for ln in out.splitlines() if ln.startswith(("stream:", "media:", "daemon:"))]
+    assert report == ["stream: ok", "media: ok", "daemon: ok"], (
         f"exit {proc.returncode}\n{out[-2000:]}\n{err[-4000:]}"
     )
     assert proc.returncode == 0, err[-4000:]

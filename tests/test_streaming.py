@@ -1315,9 +1315,10 @@ def test_upsert_rewrites_only_touched_buckets(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     # the touched-bucket collect (which fills the pinned batch: map stage +
-    # result), the prior state's schema read, and the clustered write (map
-    # stage + write) — the per-stage jobs of adaptive execution
-    assert len(sc.statusTracker().getJobIdsForGroup("upsert_one")) == 5
+    # result) and the clustered write (map stage + write) — the per-stage
+    # jobs of adaptive execution. The prior state is read with its
+    # recorded schema, so no schema-inference job runs.
+    assert len(sc.statusTracker().getJobIdsForGroup("upsert_one")) == 4
     after = snapshot()
     changed = [b for b in before if before[b] != after.get(b)]
     assert len(changed) == 1, f"expected 1 touched bucket, got {changed}"
@@ -1644,8 +1645,9 @@ def test_bucketed_state_survives_empty_first_batch(spark):
 def test_empty_batch_runs_no_write_job(spark, tmp_path):
     """A batch with no rows touches no bucket: upsert_into and a rollup
     writer run only the touched-bucket collect, never a write job for an
-    empty staging dir, and create no bucket state (the rollup writer
-    still records the batch id)."""
+    empty staging dir, and create no bucket state. They record only the
+    state's meta files (the rollup writer also the batch id)."""
+    from gmall_flink_spark.sinks._bucketed import has_bucket_dirs
     from gmall_flink_spark.sinks.rollup import rollup_writer
     from gmall_flink_spark.sinks.upsert import upsert_into
 
@@ -1663,7 +1665,8 @@ def test_empty_batch_runs_no_write_job(spark, tmp_path):
 
     upsert_state = str(tmp_path / "upsert")
     assert jobs("empty_upsert", lambda: upsert_into(upsert_state, empty, ["k"], ["ts"])) == 1
-    assert not os.path.exists(upsert_state)
+    assert not has_bucket_dirs(upsert_state)
+    assert sorted(os.listdir(upsert_state)) == ["_N_BUCKETS", "_SCHEMA"]
 
     rollup_state = str(tmp_path / "rollup")
     # a per-row partial (no groupBy): the collect is then a single job
@@ -1671,7 +1674,53 @@ def test_empty_batch_runs_no_write_job(spark, tmp_path):
         rollup_state, ["k"], lambda d: d.select("k", F.col("v").cast("bigint").alias("v_sum"))
     )
     assert jobs("empty_rollup", lambda: write(empty, 0)) == 1
-    assert os.listdir(rollup_state) == ["_LAST_BATCH"]
+    assert sorted(os.listdir(rollup_state)) == ["_LAST_BATCH", "_N_BUCKETS", "_SCHEMA"]
+
+
+def test_read_state_after_only_empty_batches(spark, tmp_path):
+    """A sink that has only seen empty batches still has a state: its
+    schema is recorded from the analyzed merge, so read_state returns
+    zero rows with the state's columns instead of failing on a dir with
+    no parquet."""
+    from gmall_flink_spark.sinks.rollup import read_state, rollup_writer
+    from gmall_flink_spark.sinks.upsert import upsert_into
+
+    empty = spark.createDataFrame([], "k string, v int, ts bigint")
+
+    upsert_state = str(tmp_path / "upsert")
+    upsert_into(upsert_state, empty, ["k"], ["ts"])
+    upsert_into(upsert_state, empty, ["k"], ["ts"])
+    got = read_state(spark, upsert_state)
+    assert got.collect() == []
+    assert got.schema.simpleString() == "struct<k:string,v:int,ts:bigint>"
+
+    rollup_state = str(tmp_path / "rollup")
+    write = rollup_writer(
+        rollup_state, ["k"], lambda d: d.groupBy("k").agg(F.sum("v").cast("bigint").alias("v_sum"))
+    )
+    write(empty, 0)
+    got = read_state(spark, rollup_state)
+    assert got.collect() == []
+    assert got.schema.simpleString() == "struct<k:string,v_sum:bigint>"
+    # the next batch with rows merges into the recorded, empty state
+    write(spark.createDataFrame([("a", 2, 1)], empty.schema), 1)
+    assert rows(read_state(spark, rollup_state)) == [("a", 2)]
+
+
+
+def test_state_without_schema_record_reads_until_next_write(spark, tmp_path):
+    """A state dir written before schemas were recorded (no _SCHEMA) is
+    read by inference, and its next merge records the schema."""
+    from gmall_flink_spark.sinks.upsert import read_state, upsert_into
+
+    state = str(tmp_path / "upsert")
+    schema = "k bigint, ts bigint, v string"
+    upsert_into(state, spark.createDataFrame([(1, 0, "a"), (2, 0, "b")], schema), ["k"], ["ts"])
+    os.remove(os.path.join(state, "_SCHEMA"))
+    assert rows(read_state(spark, state)) == [(1, 0, "a"), (2, 0, "b")]
+    upsert_into(state, spark.createDataFrame([(1, 1, "c")], schema), ["k"], ["ts"])
+    assert os.path.exists(os.path.join(state, "_SCHEMA"))
+    assert rows(read_state(spark, state)) == [(1, 1, "c"), (2, 0, "b")]
 
 
 def _bucketed_merge_cases():
