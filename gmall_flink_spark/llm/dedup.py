@@ -648,67 +648,64 @@ def jaccard_pairs(
     )
 
 
-def _pregroup_labels(
-    sym: DataFrame, parts: int | None = None, block: int = 4096
-) -> DataFrame:
+def union_find(pairs) -> dict:
+    """Root of every node of the undirected ``pairs`` ((a, b) ints):
+    the one union-find of connected components, on the driver
+    (``_driver_components``) and in the seeding workers
+    (``_pregroup_labels``, where it ships by value). Union by min keeps
+    each root its component's minimum id; find path-compresses."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # union by min — roots stay component minima
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return {v: find(v) for v in parent}
+
+
+def _pregroup_labels(sym: DataFrame) -> DataFrame:
     """Partition-local union-find seeding for connected_components: shuffle
-    the (src, dst) edge list by CONTIGUOUS id block (``src div block`` —
+    the (src, dst) edge list by CONTIGUOUS 4096-id block (``src div 4096`` —
     hash-partitioned, so no range-sampling job) and collapse each
     partition's subgraph to its local roots in one Arrow pass — a chain of
-    length n contracts to ~n/block segments before the first distributed
-    round, so path halving then needs O(log(n/block)) rounds instead of
-    O(log n) (VERDICT r07 #8). Returns (doc_id, seed) with seed = a node
-    id in doc_id's component, seed <= doc_id — any such seeding preserves
-    the min-label invariant (labels only decrease, stay inside the
-    component), pinned by test_connected_components_pregroup_equivalence.
+    length n contracts to ~n/4096 segments before the distributed rounds
+    (VERDICT r07 #8). Returns (doc_id, component) with component = a node
+    id in doc_id's component, <= doc_id — a valid ``merge_components``
+    mapping, since min over such seeds is the min reachable id.
 
-    ``parts`` defaults to max(32, the edge frame's own partition count) so
-    the per-task union-find dict holds ~|edges|/parts entries at any input
-    size instead of a fixed 1/32 share (an OOM cliff at 100 TB); callers
-    with a known bigger graph plumb parts/block through
-    ``connected_components(pregroup_parts=..., pregroup_block=...)``.
-
-    The worker closure is a plain-dict union-find."""
+    The partition count is max(32, the edge frame's own partition count),
+    so the per-task union-find dict holds ~|edges|/parts entries at any
+    input size instead of a fixed 1/32 share."""
     import pandas as pd
 
-    if parts is None:
-        parts = max(32, sym.rdd.getNumPartitions())
-
     def run(batches):
-        parent: dict = {}
+        roots = union_find(
+            (int(a), int(b)) for pdf in batches for a, b in zip(pdf["src"], pdf["dst"])
+        )
+        if roots:
+            yield pd.DataFrame({"doc_id": list(roots), "seed": list(roots.values())})
 
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in batches:
-            for a, b in zip(pdf["src"], pdf["dst"]):
-                a, b = int(a), int(b)
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:  # union by min — roots stay component minima
-                    if ra < rb:
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
-        if parent:
-            nodes_ = list(parent)
-            yield pd.DataFrame(
-                {"doc_id": nodes_, "seed": [find(v) for v in nodes_]}
-            )
-
+    parts = max(32, sym.rdd.getNumPartitions())
     return (
-        sym.repartition(parts, F.expr(f"src div {block}"))
+        sym.repartition(parts, F.expr("src div 4096"))
         .mapInPandas(run, "doc_id long, seed long")
         # a node split across partitions has several seeds, all in its
         # component: keep the smallest
         .groupBy("doc_id")
-        .agg(F.min("seed").alias("seed"))
+        .agg(F.min("seed").alias("component"))
     )
 
 
@@ -716,216 +713,129 @@ def _pregroup_labels(
 #: this many edges is solved by one bounded collect + union-find on the
 #: driver (a 1M-edge list is ~16 MB — the "bounded frame" collect class
 #: alphabet/vocab/merge lists already sit in, well under
-#: driver.maxResultSize); anything larger takes the distributed round
-#: loop. The crossover is measured, not guessed: at 262k edges (the sf0.1
-#: entity graph) the driver solve runs the whole query at ~0.6x the
-#: distributed pregroup path's wall, because each distributed round is a
-#: driver-synced job + eager checkpoint regardless of cluster size, while
-#: the union-find is ~1M edges/sec of bounded driver work. At 100 TB the
-#: verified pair graph blows far past this and the bound is what keeps
-#: the collect safe.
+#: driver.maxResultSize); anything larger takes the distributed path. The
+#: crossover is measured, not guessed: at 262k edges (the sf0.1 entity
+#: graph) the driver solve runs the whole query at ~0.6x the distributed
+#: path's wall, because each distributed round is a driver-synced job +
+#: eager checkpoint regardless of cluster size, while the union-find is
+#: ~1M edges/sec of bounded driver work. At 100 TB the verified pair graph
+#: blows far past this and the bound is what keeps the collect safe.
 CC_DRIVER_MAX_EDGES = 1_000_000
 
+#: round budget of the distributed label loop. Path halving doubles each
+#: label's reach per round, so 20 rounds cover diameters far past any
+#: contracted graph; a graph that still changes after them fails loudly.
+CC_MAX_ROUNDS = 20
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    max_rounds: int = 20,
-    shortcut: bool = False,
-    pregroup: bool = False,
-    pregroup_parts: int | None = None,
-    pregroup_block: int = 4096,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation — the final
-    step of near-dup dedup (pair graph → clusters → keep one representative
-    per cluster). Pure DataFrame iteration: each round every node adopts the
-    minimum label among itself and its neighbours; converged when no label
-    changes (checked with one count per round — driver control flow only,
-    data never leaves executors; same shape as k-means Lloyd iteration).
 
-    Rounds needed = graph diameter (near-dup clusters are shallow: dup
-    groups are cliques or short chains). One shuffle per round on the node
-    id. Returns (doc_id, component) with component = min doc_id reachable.
-
-    ``shortcut=True`` adds pointer shortcutting (path halving: after the
-    neighbour step each node also adopts ITS LABEL'S label — labels are
-    node ids, so the label table doubles as a parent-pointer table) at the
-    cost of one extra labels⋈labels join per round. Reach doubles per
-    round, so convergence needs O(log diameter) rounds instead of
-    O(diameter) — the right mode for chain-shaped graphs (sequential-id
-    entity matching), while plain propagation stays cheapest for the
-    shallow clique-ish graphs near-dup dedup produces. Same result either
-    way (pinned by test_connected_components_shortcut_equivalence).
-
-    ``edges`` = (doc_a, doc_b) undirected; ``nodes`` defaults to the docs
-    appearing in any edge (derived WITHOUT re-running the edge pipeline).
-
-    Size-adaptive execution (optimization r14, guide §1.2): a pair graph
-    at or under ``CC_DRIVER_MAX_EDGES`` is solved by one driver-side
-    union-find over the (already checkpointed) edge list instead of the
-    distributed round loop — the loop's per-round convergence count is a
-    driver sync anyway, so a small graph pays several sequential jobs +
-    eager checkpoints for work one bounded collect finishes in
-    milliseconds. The bound keeps the collect O(bound) no matter the
-    corpus (the same self-sizing contract as near_dup_pairs'
-    kernel="auto"); bigger graphs take the distributed path untouched.
-    Identical min-label result either way (union by min == min reachable
-    node id), pinned by the shortcut/pregroup equivalence tests which
-    exercise both sides of the bound.
-    """
-    # materialize the edge list once: the loop joins it every round, and a
-    # separately-derived nodes frame would re-execute the whole upstream
-    # pipeline (LSH + jaccard) a second time
-    e = edges.localCheckpoint(eager=True)
-    if nodes is None:
-        # bounded-size fast path: take() reads the checkpointed blocks (one
-        # cheap job); a result within the bound IS the whole graph
-        bound = CC_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
-        head = e.select("doc_a", "doc_b").take(bound + 1) if bound > 0 else []
-        if bound > 0 and len(head) <= bound:
-            import pandas as pd
-
-            parent: dict = {}
-
-            def find(x: int) -> int:
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in head:
-                a, b = int(row[0]), int(row[1])
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:  # union by min — roots stay component minima
-                    if ra < rb:
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
-            keys = list(parent)
-            pdf = pd.DataFrame(
-                {"doc_id": keys, "component": [find(v) for v in keys]},
-                dtype="int64",
-            )
-            return edges.sparkSession.createDataFrame(
-                pdf, "doc_id long, component long"
-            )
-    sym = e.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
+def _symmetric(e: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) edges as directed (src, dst) arcs both ways."""
+    return e.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
         e.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    if nodes is None:
-        nodes = sym.select(F.col("src").alias("doc_id")).distinct()
-    if pregroup:
-        # seed each label with its partition-local root (still inside the
-        # component, <= doc_id), collapsing long chains before round 1
-        seeds = _pregroup_labels(sym, parts=pregroup_parts, block=pregroup_block)
-        base = (
-            nodes.join(seeds, "doc_id", "left")
-            .select(
-                "doc_id", F.coalesce("seed", F.col("doc_id")).alias("component")
-            )
-            .localCheckpoint(eager=True)
-        )
-        # contract-then-iterate (optimization r14, guide §2.4/§1.2): the
-        # distributed rounds used to join the FULL edge list every round;
-        # contracting each edge through its endpoints' seeds first leaves a
-        # super-graph of ~(chain segments) nodes, so every round's shuffle
-        # is tiny. Same min-label result (merge_components argument): seed
-        # labels are node ids inside their component with seed <= doc_id,
-        # so min over reachable seeds == min over reachable nodes, and the
-        # recursive min-label run on the contracted graph computes exactly
-        # that. Equality with the plain path stays pinned by
-        # test_connected_components_pregroup_equivalence.
-        sa = base.select(F.col("doc_id").alias("src"), F.col("component").alias("_ca"))
-        sb = base.select(F.col("doc_id").alias("dst"), F.col("component").alias("_cb"))
-        contracted = (
-            sym.join(sa, "src")
-            .join(sb, "dst")
-            .select(F.col("_ca").alias("doc_a"), F.col("_cb").alias("doc_b"))
-            .where(F.col("doc_a") != F.col("doc_b"))
-            .distinct()
-        )
-        sub = connected_components(
-            contracted,
-            max_rounds=max_rounds,
-            shortcut=shortcut,
-            driver_max_edges=driver_max_edges,
-        )
-        relabel = sub.select(
-            F.col("doc_id").alias("component"), F.col("component").alias("_new")
-        )
-        return base.join(relabel, "component", "left").select(
-            "doc_id", F.coalesce("_new", F.col("component")).alias("component")
-        )
-    else:
-        labels = nodes.select(
-            "doc_id", F.col("doc_id").alias("component")
-        ).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_rounds):  # diameter bound; near-dup graphs converge in 2-3
+
+
+def _driver_components(e: DataFrame) -> DataFrame | None:
+    """(doc_id, component) of a checkpointed edge list of at most
+    ``CC_DRIVER_MAX_EDGES`` edges, solved by ``union_find`` on the driver;
+    None above the bound. take(bound + 1) reads the checkpointed blocks
+    (one cheap job), and a result within the bound IS the whole graph."""
+    bound = CC_DRIVER_MAX_EDGES
+    if bound <= 0:
+        return None
+    head = e.select("doc_a", "doc_b").take(bound + 1)
+    if len(head) > bound:
+        return None
+    import pandas as pd
+
+    roots = union_find((int(a), int(b)) for a, b in head)
+    pdf = pd.DataFrame(
+        {"doc_id": list(roots), "component": list(roots.values())}, dtype="int64"
+    )
+    return e.sparkSession.createDataFrame(pdf, "doc_id long, component long")
+
+
+def _propagate(e: DataFrame) -> DataFrame:
+    """The distributed label loop over a checkpointed edge list: each round
+    every node adopts the minimum label among itself and its neighbours,
+    then its label's label (path halving: labels are node ids, so the
+    label table doubles as a parent-pointer table; L(L(v)) <= L(v)
+    because labels only decrease and L(x) <= x). Reach doubles per
+    round, so rounds grow with log(diameter). Converged when no label
+    changes; raises after ``CC_MAX_ROUNDS`` rounds."""
+    from pyspark.sql import Observation
+
+    sym = _symmetric(e)
+    labels = (
+        sym.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.col("doc_id").alias("component"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(CC_MAX_ROUNDS):
         nbr_min = (
             sym.join(labels, sym.dst == labels.doc_id)
             .groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("component").alias("nbr"))
         )
-        updated = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("component").alias("_old"),
-                F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias(
-                    "component"
-                ),
-            )
-        )
-        if shortcut:
-            m = labels.select(
-                F.col("doc_id").alias("_k"), F.col("component").alias("_v")
-            )
-            updated = updated.join(
-                m, updated.component == m._k, "left"
-            ).select(
-                "doc_id",
-                "_old",
-                # L(L(v)) <= L(v) always (labels only decrease and L(x) <= x)
-                F.coalesce("_v", "component").alias("component"),
-            )
-        updated = updated.select(
+        updated = labels.join(nbr_min, "doc_id", "left").select(
             "doc_id",
-            "component",
-            (F.col("component") < F.col("_old")).alias("_chg"),
+            F.col("component").alias("_old"),
+            F.least(F.col("component"), F.coalesce("nbr", F.col("component"))).alias(
+                "component"
+            ),
+        )
+        m = labels.select(F.col("doc_id").alias("_k"), F.col("component").alias("_v"))
+        halved = F.coalesce("_v", "component")
+        updated = updated.join(m, updated.component == m._k, "left").select(
+            "doc_id", halved.alias("component"), (halved < F.col("_old")).alias("_chg")
         )
         # the convergence check rides the SAME job that materializes the
         # round's labels (Observation metrics are collected during the
         # eager localCheckpoint) — one job per round, not materialize+count
-        from pyspark.sql import Observation
-
         obs = Observation()
         updated = updated.observe(
             obs, F.sum(F.col("_chg").cast("bigint")).alias("chg")
         ).localCheckpoint(eager=True)
-        changed = obs.get["chg"] or 0
         labels = updated.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # silent fall-through would return WRONG labels (a chain longer
-        # than max_rounds splits into multiple components and dedup keeps
-        # extra "representatives") — fail loudly; callers raise the bound
-        raise RuntimeError(
-            f"connected_components did not converge within {max_rounds} "
-            "rounds; the graph has a component with larger diameter — "
-            "raise max_rounds"
-        )
-    return labels
+        if not obs.get["chg"]:
+            return labels
+    # silent fall-through would return WRONG labels (a long chain splits
+    # into several components and dedup keeps extra "representatives")
+    raise RuntimeError(
+        f"connected_components did not converge within {CC_MAX_ROUNDS} "
+        "rounds; the graph has a component with larger diameter — "
+        "raise CC_MAX_ROUNDS"
+    )
 
 
-def merge_components(mapping: DataFrame, new_edges: DataFrame, max_rounds: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of the undirected (doc_a, doc_b) ``edges`` —
+    the final step of near-dup dedup (pair graph → clusters → keep one
+    representative per cluster) and of entity resolution (match edges →
+    golden records). Returns (doc_id, component) for every doc in an
+    edge, with component = the min doc_id reachable.
+
+    One path, chosen by size. The edge list is checkpointed once. A graph
+    of at most ``CC_DRIVER_MAX_EDGES`` edges is solved by ``union_find``
+    on the driver: one bounded collect, where the distributed loop pays a
+    driver-synced job and an eager checkpoint per round. A bigger graph
+    is seeded by ``_pregroup_labels`` (a partition-local union-find over
+    contiguous id blocks, so a chain collapses to ~n/4096 segments) and
+    the seeds are folded with the edges through ``merge_components``,
+    which solves the small contracted graph (driver union-find, or the
+    path-halving round loop). Union by min and min-label propagation
+    give the same labels, pinned by
+    test_connected_components_distributed_equals_driver."""
+    e = edges.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    small = _driver_components(e)
+    if small is not None:
+        return small
+    seeds = _pregroup_labels(_symmetric(e)).localCheckpoint(eager=True)
+    return merge_components(seeds, e)
+
+
+def merge_components(mapping: DataFrame, new_edges: DataFrame) -> DataFrame:
     """Incrementally fold ``new_edges`` into an existing component
     ``mapping`` (doc_id, component — component = min reachable doc_id, the
     connected_components contract), returning the updated FULL mapping
@@ -933,27 +843,34 @@ def merge_components(mapping: DataFrame, new_edges: DataFrame, max_rounds: int =
 
     Correctness: contract each new edge's endpoints through the old
     mapping (an unmapped endpoint — a brand-new doc or an old singleton —
-    contracts to itself), drop self-loops, and run connected_components on
-    the CONTRACTED graph only. Contracted node ids are old component
-    labels (each the min doc_id of its old cluster) and unmapped doc ids,
-    so the sub-graph's min-label result equals the full rebuild's label on
-    the merged cluster: min over merged old-cluster minima and new ids =
-    global min. Old rows relabel through the (old component → new
-    component) map; unmapped endpoints gain rows. Equality with a full
-    rebuild is pinned by test_merge_components_equals_full_rebuild.
+    contracts to itself), drop self-loops, and solve the CONTRACTED graph
+    only. Contracted node ids are old component labels (each the min
+    doc_id of its old cluster) and unmapped doc ids, so the sub-graph's
+    min-label result equals the full rebuild's label on the merged
+    cluster: min over merged old-cluster minima and new ids = global min.
+    The same argument holds for any mapping whose labels are ids inside
+    the doc's component and <= the doc id, which is how
+    connected_components folds its seeds through here. Old rows relabel
+    through the (old component → new component) map; unmapped endpoints
+    gain rows. Equality with a full rebuild is pinned by
+    test_merge_components_equals_full_rebuild.
 
-    Cost at scale: the iteration runs on |edges touching the delta| —
+    The contracted graph is solved by the driver union-find at or under
+    ``CC_DRIVER_MAX_EDGES`` edges, else by the path-halving round loop —
+    never by seeding again, so the two functions cannot recurse.
+
+    Cost at scale: the solve runs on |edges touching the delta| —
     proportional to the DELTA's cluster overlap, not the corpus; the full
     mapping is touched by exactly one relabel join (and the bucketed
     artifact form rewrites only the buckets holding changed rows — see
     queries/llm_dedup.merge_components_artifact).
 
-    Materialization is CALLER-OWNED: this function checkpoints nothing —
-    a per-call localCheckpoint of the full mapping would leak lingering
-    blocks across a long-running maintenance stream (the r04 pin_batch
-    lesson); components_writer pins the batch edges deterministically and
-    the mapping side is a plain (cheap, columnar) table re-scan per
-    consumer."""
+    Materialization is CALLER-OWNED: this function checkpoints only the
+    contracted edges it solves — a per-call localCheckpoint of the full
+    mapping would leak lingering blocks across a long-running maintenance
+    stream (the r04 pin_batch lesson); components_writer pins the batch
+    edges deterministically and the mapping side is a plain (cheap,
+    columnar) table re-scan per consumer."""
     m = mapping
     e = new_edges.select("doc_a", "doc_b")
     ma = m.select(F.col("doc_id").alias("doc_a"), F.col("component").alias("_ca"))
@@ -966,8 +883,11 @@ def merge_components(mapping: DataFrame, new_edges: DataFrame, max_rounds: int =
             F.coalesce("_cb", F.col("doc_b")).alias("doc_b"),
         )
         .where(F.col("doc_a") != F.col("doc_b"))
+        .localCheckpoint(eager=True)
     )
-    sub = connected_components(contracted, max_rounds=max_rounds)
+    sub = _driver_components(contracted)
+    if sub is None:
+        sub = _propagate(contracted)
     # old rows whose component merged into a lower label
     relabel = sub.select(
         F.col("doc_id").alias("component"), F.col("component").alias("_new")

@@ -135,10 +135,14 @@ PIPELINES: list[Pipeline] = [
              "coalesce(operate_time, create_time) event time (W5) + D4"),
     Pipeline("DwsTradeOrderWindow", "app/dws/DwsTradeOrderWindow.java:36-126",
              "S1,D5,A5,A6,K5", _q("uv_new_daily"),
-             "streaming.stateful.new_user_flags_stream (D5)"),
+             "streaming/pipelines.py::order_uu_window_stream — ONE query, "
+             "detail dedup -> stream joins -> D5 daily_new_flags_stream -> "
+             "day window; pinned by test_order_uu_window_pipeline_end_to_end"),
     Pipeline("DwsTradePaymentWindow", "app/dws/DwsTradePaymentWindow.java:32-124",
              "S1,D5,A5,A6,K5", _q("dws_payment_uu_window"),
-             "D5 new_user_flags_stream over the P7 pay-suc stream -> day window"),
+             "streaming/pipelines.py::payment_uu_window_stream — ONE query, "
+             "P7 pay-suc filter -> D5 daily_new_flags_stream -> day window; "
+             "pinned by test_payment_uu_window_pipeline_end_to_end"),
     Pipeline("DwsTradeSkuOrderWindow", "app/dws/DwsTradeSkuOrderWindow.java:50-376",
              "S1,D2,A3,A6,J7/J8/J9,K5", _q("dws_brand_order_window"),
              "streaming/pipelines.py::sku_order_window_stream — ONE query, "

@@ -83,25 +83,23 @@ ORACLE = {
 def entity_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution survivorship — the steps after candidate matching
     that produce the master-data "golden record": cluster the hamming<=1
-    name matches with connected components (min-label propagation, the
-    same distributed CC as near-dup dedup), then per cluster keep the
-    richest member (highest account balance, ties to the lowest key) and
-    report the merged view: member count, survivor, exact-cents balance
-    total, and the key span. Every emitted cluster has >= 2 members by
-    construction (components are derived from match edges).
+    name matches with connected components (the same CC as near-dup
+    dedup), then per cluster keep the richest member (highest account
+    balance, ties to the lowest key) and report the merged view: member
+    count, survivor, exact-cents balance total, and the key span. Every
+    emitted cluster has >= 2 members by construction (components are
+    derived from match edges).
 
-    Scale: CC iterates over match edges only, in pointer-shortcutting
-    mode — sequential-id matching produces CHAIN-shaped clusters, exactly
-    the graphs where path halving's O(log diameter) rounds beat plain
-    propagation's O(diameter). Unlike pairwise blocking, TRANSITIVE
-    closure does not bound cluster size (this synthetic table is the
-    worst case: sequential names chain into one table-sized component),
-    so the survivor argmax is deliberately max(struct(bal, -key)) — an
-    ordinary aggregate with map-side partials that a giant cluster cannot
-    serialize — never a per-cluster window sort. ``pregroup=True`` runs a
-    range-partitioned local union-find first, contracting each executor's
-    chain segment to one label so the distributed rounds start from
-    ~n_partitions super-nodes instead of n nodes (O(log parts) rounds)."""
+    Scale: CC runs over match edges only. Sequential-id matching produces
+    CHAIN-shaped clusters; above the driver bound the CC seeds each
+    contiguous id block with a local union-find, so a chain reaches the
+    distributed rounds as ~n/block super-nodes, and those rounds
+    path-halve. Unlike pairwise blocking, TRANSITIVE closure does not
+    bound cluster size (this synthetic table is the worst case:
+    sequential names chain into one table-sized component), so the
+    survivor argmax is deliberately max(struct(bal, -key)) — an ordinary
+    aggregate with map-side partials that a giant cluster cannot
+    serialize — never a per-cluster window sort."""
     from gmall_flink_spark.llm.dedup import connected_components
     from gmall_flink_spark.sources.tables import spread
 
@@ -113,7 +111,7 @@ def entity_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = hamming1_pairs(
         cust, key_col="c_name", id_col="c_custkey", positions=NAME_DIGIT_POSITIONS
     ).select(F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
-    comp = connected_components(edges, shortcut=True, pregroup=True)
+    comp = connected_components(edges)
     members = comp.join(
         cust, comp.doc_id == cust.c_custkey
     ).select("component", "c_custkey", "bal_cents")

@@ -19,9 +19,8 @@ per-operator twins.
 
 * ``payment_uu_window_stream`` = DwsTradePaymentWindow
   (app/dws/DwsTradePaymentWindow.java:60-110): P7 exact 1002→1005
-  transition filter → D5 (default: the event-time-correct retraction
-  twin ``daily_new_flags_stream``; ``strict_event_time=False`` keeps
-  the arrival-order dual-dedup union) → A5 counters in day windows.
+  transition filter → D5 (the event-time-correct retraction twin
+  ``daily_new_flags_stream``) → A5 counters in day windows.
 
 * ``pay_detail_suc_stream`` = DwdTradePayDetailSuc
   (app/dwd/DwdTradePayDetailSuc.java:59-158): P7 pay-suc transitions →
@@ -122,37 +121,15 @@ from gmall_flink_spark.operators.windows import tumble_agg
 #: synthetic envelopes' non-negative packed keys.
 SENTINEL_ID = -1
 
-#: seconds per supported watermark-delay unit (Spark interval keywords,
-#: singular or plural). Months/years are intentionally absent: they are
-#: not fixed-length, and a dedup delay that long should be stated in days.
-_DELAY_UNIT_SEC = {
-    "second": 1,
-    "seconds": 1,
-    "minute": 60,
-    "minutes": 60,
-    "hour": 3600,
-    "hours": 3600,
-    "day": 86400,
-    "days": 86400,
-    "week": 604800,
-    "weeks": 604800,
-}
-
-
 def _day_watermark_delay(dedup_delay: str) -> str:
     """Day-grain watermark delay = ``dedup_delay`` rounded UP to whole
     days, plus the 1-day correction-safety margin (see
     daily_new_flags_stream). Parses the unit instead of assuming a
     day-denominated string (ADVICE r10 #2): '2 weeks' must widen the
     day watermark to 15 days, not 3."""
-    parts = dedup_delay.split()
-    if len(parts) != 2 or parts[1].lower() not in _DELAY_UNIT_SEC:
-        raise ValueError(
-            f"dedup_delay must be 'N <unit>' with unit in "
-            f"{sorted(set(_DELAY_UNIT_SEC))}; got {dedup_delay!r}"
-        )
-    sec = int(parts[0]) * _DELAY_UNIT_SEC[parts[1].lower()]
-    return f"{-(-sec // 86400) + 1} days"
+    from gmall_flink_spark.streaming.stateful import _interval_ms
+
+    return f"{-(-_interval_ms(dedup_delay) // 86_400_000) + 1} days"
 
 
 def _od_stream(env: DataFrame) -> DataFrame:
@@ -236,30 +213,23 @@ def cart_add_uu_window_stream(
 def payment_uu_window_stream(
     oi_env: DataFrame,
     dedup_delay: str = "3650 days",
-    strict_event_time: bool = True,
 ) -> DataFrame:
     """DwsTradePaymentWindow as one streaming query (P7→D5→A5/A6,
     app/dws/DwsTradePaymentWindow.java:60-110): order_info envelope
     stream → exact 1002→1005 pay-success transition filter → D5
     per-day-unique + first-ever-payer counters in day windows.
 
-    Default (``strict_event_time=True``): the retraction-style,
-    EVENT-TIME-CORRECT D5 twin (streaming/stateful.py::
-    daily_new_flags_stream — the same operator order_uu_window_stream
-    uses): one delta row per (user, day) first sight, correction pairs
-    when a chronologically earlier day surfaces late, summed in
-    day-grain windows whose watermark delay is one day longer than the
-    payment-side delay (the correction-safety margin proven in the
-    operator's docstring). Correct under ANY arrival order — pinned by
-    a disorder fixture in addition to the ordered-replay equality test.
-
-    ``strict_event_time=False`` keeps the cheaper arrival-order form
-    (dual-dedup union: (user, day) branch for uu, (user) branch for
-    first-ever): exact only when arrival order is event-time order —
-    i.e. an ordered-replay harness or the reference's effectively
-    in-order single-partition topic; it mirrors the reference's own
-    processing-order ValueState semantics."""
+    D5 is the retraction-style, EVENT-TIME-CORRECT twin
+    (streaming/stateful.py::daily_new_flags_stream — the same operator
+    order_uu_window_stream uses): one delta row per (user, day) first
+    sight, correction pairs when a chronologically earlier day surfaces
+    late, summed in day-grain windows whose watermark delay is one day
+    longer than the payment-side delay (the correction-safety margin
+    proven in the operator's docstring). Correct under ANY arrival order
+    — pinned by a disorder fixture in addition to the ordered-replay
+    equality test."""
     from gmall_flink_spark.operators.cdc import status_transition
+    from gmall_flink_spark.streaming.stateful import daily_new_flags_stream
 
     pays = (
         src_filter(drop_bootstrap(oi_env), "order_info")
@@ -269,57 +239,22 @@ def payment_uu_window_stream(
             F.timestamp_seconds("ts").alias("rt"),
         )
     )
-    if strict_event_time:
-        from gmall_flink_spark.streaming.stateful import daily_new_flags_stream
-
-        flags = daily_new_flags_stream(
-            pays.withWatermark("rt", dedup_delay), "user_id", ts="rt"
-        )
-        w = flags.withColumn("day_ts", F.to_timestamp("cur_date")).withWatermark(
-            "day_ts", _day_watermark_delay(dedup_delay)
-        )
-        return tumble_agg(
-            w,
-            "day_ts",
-            "1 day",
-            [],
-            [
-                F.sum("uu").cast("long").alias("payment_suc_uu_ct"),
-                F.sum("new_delta").cast("long").alias("payment_suc_new_user_ct"),
-            ],
-        ).select("stt", "edt", "payment_suc_uu_ct", "payment_suc_new_user_ct")
-    uu = (
-        pays.withColumn("cur_date", F.date_format("rt", "yyyy-MM-dd"))
-        .withWatermark("rt", dedup_delay)
-        .dropDuplicatesWithinWatermark(["user_id", "cur_date"])
-        .select(
-            "rt",
-            F.lit(1).cast("long").alias("uu"),
-            F.lit(0).cast("long").alias("new_u"),
-        )
+    flags = daily_new_flags_stream(
+        pays.withWatermark("rt", dedup_delay), "user_id", ts="rt"
     )
-    first_ever = (
-        pays.withWatermark("rt", dedup_delay)
-        .dropDuplicatesWithinWatermark(["user_id"])
-        .select(
-            "rt",
-            F.lit(0).cast("long").alias("uu"),
-            F.lit(1).cast("long").alias("new_u"),
-        )
+    w = flags.withColumn("day_ts", F.to_timestamp("cur_date")).withWatermark(
+        "day_ts", _day_watermark_delay(dedup_delay)
     )
-    return (
-        tumble_agg(
-            uu.unionByName(first_ever),
-            "rt",
-            "1 day",
-            [],
-            [
-                F.sum("uu").alias("payment_suc_uu_ct"),
-                F.sum("new_u").alias("payment_suc_new_user_ct"),
-            ],
-        )
-        .select("stt", "edt", "payment_suc_uu_ct", "payment_suc_new_user_ct")
-    )
+    return tumble_agg(
+        w,
+        "day_ts",
+        "1 day",
+        [],
+        [
+            F.sum("uu").cast("long").alias("payment_suc_uu_ct"),
+            F.sum("new_delta").cast("long").alias("payment_suc_new_user_ct"),
+        ],
+    ).select("stt", "edt", "payment_suc_uu_ct", "payment_suc_new_user_ct")
 
 
 def traffic_grain_window_stream(
@@ -605,8 +540,7 @@ def user_login_window_stream(
     from the append output no matter how many sentinel slices replay.
 
     Scale: D6 state is one date per user; the window agg adds one
-    counter pair per day — both keyed, both bounded; the union-free
-    single-branch shape (unlike payment's dual-dedup) is possible
+    counter pair per day — both keyed, both bounded; one branch is enough
     because the D6 operator already emits exactly one row per (user,
     active day) with the is_back flag decided by real state."""
     from gmall_flink_spark.streaming.stateful import returning_flags_stream

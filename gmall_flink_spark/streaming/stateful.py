@@ -61,19 +61,24 @@ def _batch_sorted(pdfs, sort_cols: list) -> "pd.DataFrame | None":
     return out.sort_values(sort_cols)
 
 
+#: milliseconds per supported interval unit (Spark interval keywords,
+#: singular or plural). Months/years are intentionally absent: they are
+#: not fixed-length, and a delay that long should be stated in days.
 _INTERVAL_UNIT_MS = {
     "millisecond": 1, "milliseconds": 1,
     "second": 1000, "seconds": 1000,
     "minute": 60_000, "minutes": 60_000,
     "hour": 3_600_000, "hours": 3_600_000,
     "day": 86_400_000, "days": 86_400_000,
+    "week": 604_800_000, "weeks": 604_800_000,
 }
 
 
 def _interval_ms(interval: str) -> int:
-    """Parse a Spark-style '<n> <unit>' interval string to milliseconds.
-    Rejects unknown units instead of silently assuming seconds ('1 minute'
-    read as 1 s would fire timers ~59 s early with no error)."""
+    """Parse a Spark-style '<n> <unit>' interval string to milliseconds —
+    the one parser of timer delays and watermark delays. Rejects unknown
+    units instead of silently assuming seconds ('1 minute' read as 1 s
+    would fire timers ~59 s early with no error)."""
     parts = interval.split()
     if len(parts) != 2 or parts[1].lower() not in _INTERVAL_UNIT_MS:
         raise ValueError(

@@ -319,3 +319,40 @@ def test_bucketed_reads_pass_a_schema():
                 if names[-1] == "parquet" and "read" in names and "schema" not in names:
                     inferring.append(fn.name)
     assert inferring == ["_state_schema"], inferring
+
+
+def test_one_connected_components_path():
+    """Static guard behind llm.dedup's one CC path: connected_components
+    takes only the edges and merge_components only (mapping, new_edges),
+    so no caller can pick a mode; and the package holds one union-find,
+    ``llm/dedup.py::union_find``. A union-find is spotted by its find
+    loop, ``while parent[x] != ...``; a top-level function or class whose
+    body walks one is a union-find."""
+    import ast
+    import inspect
+    import pathlib
+
+    import gmall_flink_spark
+    from gmall_flink_spark.llm.dedup import connected_components, merge_components
+
+    hits = []
+    if list(inspect.signature(connected_components).parameters) != ["edges"]:
+        hits.append("connected_components takes more than edges")
+    if list(inspect.signature(merge_components).parameters) != ["mapping", "new_edges"]:
+        hits.append("merge_components takes more than (mapping, new_edges)")
+
+    def is_find_loop(node):
+        return (
+            isinstance(node, ast.While)
+            and isinstance(node.test, ast.Compare)
+            and isinstance(node.test.left, ast.Subscript)
+            and isinstance(node.test.ops[0], ast.NotEq)
+        )
+
+    pkg_root = pathlib.Path(gmall_flink_spark.__file__).parent
+    for path in sorted(pkg_root.rglob("*.py")):
+        rel = path.relative_to(pkg_root)
+        for top in ast.parse(path.read_text()).body:
+            if any(is_find_loop(n) for n in ast.walk(top)):
+                hits.append(f"{rel}::{getattr(top, 'name', type(top).__name__)}")
+    assert hits == ["llm/dedup.py::union_find"], hits

@@ -704,17 +704,15 @@ def test_label_drift_surfaces_single_half_labels(spark, tmp_path):
     assert got == con.sql(ORACLE["sim_label_drift"]).fetchall()
 
 
-@pytest.mark.slow
-def test_connected_components_shortcut_equivalence(spark):
-    """Pointer-shortcutting CC must produce exactly the plain propagation's
-    labels (min reachable id) — on the real fuzzy-match graph — and must
-    converge in O(log diameter) rounds where plain propagation needs
-    O(diameter): a 50-node chain exceeds plain mode's 20-round bound
-    (which fails loudly by contract) but shortcut mode resolves it to one
-    component in ~7 rounds."""
-    import pytest
-
-    from gmall_flink_spark.llm.dedup import connected_components
+def test_connected_components_distributed_equals_driver(spark, monkeypatch):
+    """Above CC_DRIVER_MAX_EDGES, connected_components seeds a
+    partition-local union-find and folds the seeds through
+    merge_components; its labels must equal the driver union-find's (min
+    reachable id) on the real fuzzy-match graph, and a 5000-node chain
+    (the production shape: consecutive-id entity matches) must come out
+    as one component. The round loop still fails loudly when its budget
+    runs out instead of returning split components."""
+    from gmall_flink_spark.llm import dedup
     from gmall_flink_spark.operators.fuzzy import hamming1_pairs
     from gmall_flink_spark.queries.entity import NAME_DIGIT_POSITIONS
     from gmall_flink_spark.sources.tables import spread, table
@@ -727,76 +725,40 @@ def test_connected_components_shortcut_equivalence(spark):
         positions=NAME_DIGIT_POSITIONS,
     ).select(F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
     edges = edges.localCheckpoint(eager=True)
-    plain = sorted(map(tuple, connected_components(edges).collect()))
-    fast = sorted(map(tuple, connected_components(edges, shortcut=True).collect()))
-    assert plain == fast
+    driver = sorted(map(tuple, dedup.connected_components(edges).collect()))
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    distributed = sorted(map(tuple, dedup.connected_components(edges).collect()))
+    assert distributed == driver
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(49)], "doc_a bigint, doc_b bigint"
-    )
-    # driver_max_edges=0 forces the distributed loop (the r14 bounded
-    # union-find fast path would otherwise solve any sub-bound graph
-    # before the round loop runs) — the convergence contract still holds
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_rounds=20, driver_max_edges=0)
-    got = connected_components(
-        chain, max_rounds=20, shortcut=True, driver_max_edges=0
-    ).collect()
-    assert {r.component for r in got} == {0} and len(got) == 50
-    # and the default fast path must produce the identical labels
-    fast_path = sorted(map(tuple, connected_components(chain).collect()))
-    assert fast_path == sorted((i, 0) for i in range(50))
-
-
-def test_connected_components_pregroup_equivalence(spark):
-    """Partition-local union-find seeding (pregroup=True) must produce
-    exactly the plain labels (min reachable id) — on the real fuzzy-match
-    graph AND on a chain long enough that unseeded plain propagation can't
-    converge within the round budget. Seeds are only valid if they stay
-    inside the component and <= the node id; label equality across modes
-    is the proof."""
-    from gmall_flink_spark.llm.dedup import connected_components
-    from gmall_flink_spark.operators.fuzzy import hamming1_pairs
-    from gmall_flink_spark.queries.entity import NAME_DIGIT_POSITIONS
-    from gmall_flink_spark.sources.tables import spread, table
-
-    cust = spread(table(spark, "/root/testdata/sf0.001", "customer"), "c_custkey")
-    edges = hamming1_pairs(
-        cust.select("c_custkey", "c_name"),
-        key_col="c_name",
-        id_col="c_custkey",
-        positions=NAME_DIGIT_POSITIONS,
-    ).select(F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
-    edges = edges.localCheckpoint(eager=True)
-    # driver_max_edges=0 pins BOTH distributed modes against each other
-    # (the r14 default fast path would otherwise absorb sub-bound graphs);
-    # the fast path itself is the third operand of the same equality
-    plain = sorted(
-        map(tuple, connected_components(edges, driver_max_edges=0).collect())
-    )
-    seeded = sorted(
-        map(
-            tuple,
-            connected_components(
-                edges, shortcut=True, pregroup=True, driver_max_edges=0
-            ).collect(),
-        )
-    )
-    assert plain == seeded
-    fast = sorted(map(tuple, connected_components(edges).collect()))
-    assert plain == fast
-
-    # 5000-node sequential chain (the production shape: consecutive-id
-    # entity matches), 100x plain mode's 20-round bound: pregroup
-    # contracts each range partition to one label before round 1, so the
-    # distributed rounds see ~n_partitions super-nodes
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(4999)], "doc_a bigint, doc_b bigint"
     )
-    got = connected_components(
-        chain, max_rounds=20, shortcut=True, pregroup=True, driver_max_edges=0
-    ).collect()
+    got = dedup.connected_components(chain).collect()
     assert {r.component for r in got} == {0} and len(got) == 5000
+    # one node per 4096-id seeding block: the seeds cannot collapse this
+    # chain inside one partition, so the round loop has edges to solve
+    sparse = spark.createDataFrame(
+        [(i * 4096, (i + 1) * 4096) for i in range(49)], "doc_a bigint, doc_b bigint"
+    )
+    got = dedup.connected_components(sparse).collect()
+    assert {r.component for r in got} == {0} and len(got) == 50
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(sparse)
+
+
+def test_connected_components_long_chain_above_bound(spark, monkeypatch):
+    """Above the bound every caller gets the seeded path: a 50-node chain
+    (diameter 49) resolves to one component instead of exhausting the
+    round budget."""
+    from gmall_flink_spark.llm import dedup
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "doc_a bigint, doc_b bigint"
+    )
+    got = sorted(map(tuple, dedup.connected_components(chain).collect()))
+    assert got == [(i, 0) for i in range(50)]
 
 
 def test_normalize_url_rules(spark):

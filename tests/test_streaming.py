@@ -2338,8 +2338,8 @@ def test_streaming_substr_gram_index_equals_batch(spark):
 def test_payment_uu_window_pipeline_end_to_end(spark):
     """DwsTradePaymentWindow as ONE availableNow query — order_info
     envelope source → P7 1002→1005 transition filter → D5 via the
-    dual-dedup union ((user, day) for uu, (user) for first-ever) → day
-    windows — equals the batch twin dws_payment_uu_window exactly. The
+    retraction twin daily_new_flags_stream → day windows — equals the
+    batch twin dws_payment_uu_window exactly. The
     sentinel must be an UPDATE envelope carrying old.order_status=1002:
     the transition filter sits upstream of the watermark node, so a
     plain insert sentinel would be dropped before advancing it."""
